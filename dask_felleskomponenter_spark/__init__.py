@@ -11,7 +11,10 @@ Design stance (SURVEY.md §7):
 - Built-in ``pyspark.sql.functions`` in every hot path; Pandas UDFs only
   where built-ins cannot express the semantics (multimodal decode).
 - Explicit broadcast of dimension tables, AQE on, partition-count tuned to
-  the cluster; no ``collect()`` in library code paths.
+  the cluster; no ``collect()`` in library code paths, with one bounded
+  exception: small-graph connected components pull at most
+  ``_CC_SINGLE_TASK_EDGES`` edges (~4 MB) to the driver and solve them
+  there (``operators/graph.py``).
 """
 
 from dask_felleskomponenter_spark.session import get_spark

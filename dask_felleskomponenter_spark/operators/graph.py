@@ -162,63 +162,58 @@ def _small_star(e: DataFrame, parts: int) -> DataFrame:
 _CC_ROWS_PER_PARTITION = 262_144
 
 
-#: Edge count at or below which the whole component computation runs as
-#: ONE union-find task instead of the star-contraction loop. Matches
-#: _CC_ROWS_PER_PARTITION: "the loop would run every shuffle in a
-#: single partition anyway" is exactly the regime where 4-6 sequential
-#: driver-coordinated rounds (each a full plan-compile + job barrier,
-#: measured ~0.55 s/round on a 920-edge graph — latency, not work) lose
-#: to one task walking the edges once. The adaptive pick mirrors AQE's
-#: own size-based re-planning and uses a statistic (the materialized
-#: edge count) the optimizer doesn't have.
+#: Edge count at or below which the components are solved by one
+#: union-find pass on the driver instead of the star-contraction loop.
+#: Matches _CC_ROWS_PER_PARTITION: "the loop would run every shuffle in
+#: a single partition anyway" is exactly the regime where 4-6
+#: sequential driver-coordinated rounds (each a full plan-compile + job
+#: barrier, measured ~0.55 s/round on a 920-edge graph — latency, not
+#: work) lose to walking the edges once. Two longs per edge bound the
+#: pull to ~4 MB. The adaptive pick mirrors AQE's own size-based
+#: re-planning and uses a statistic (the materialized edge count) the
+#: optimizer doesn't have.
 _CC_SINGLE_TASK_EDGES = _CC_ROWS_PER_PARTITION
 
 
-def _single_task_components(edges: DataFrame) -> DataFrame:
-    """Exact components of a small canonical edge list in ONE task.
+def _driver_components(edges: DataFrame) -> DataFrame:
+    """Exact components of a small canonical edge list, solved on the
+    driver.
 
-    ``coalesce(1)`` (no shuffle — the cached partitions are read
-    by a single task) feeds every edge to one ``mapInPandas`` worker
-    running path-compressed union-find with union-toward-the-minimum,
-    so each node's final root IS its component minimum — byte-identical
-    output to the star-loop fixpoint (pytest pins both paths against
-    the same model). Bounded by ``_CC_SINGLE_TASK_EDGES`` rows of two
-    longs, so the task never sees more than a few MB."""
-    from pyspark.sql.types import LongType, StructField, StructType
+    The (cached) edges come over as one Arrow table — bounded by
+    ``_CC_SINGLE_TASK_EDGES`` rows of two longs, the one ``collect``
+    the package allows itself — and path-compressed union-find with
+    union-toward-the-minimum makes each node's final root its
+    component minimum: byte-identical output to the star-loop fixpoint
+    (pytest pins both paths against the same model). The result is a
+    local ``(node, component)`` frame, so every consumer (the sizes
+    aggregate and the join in ``assign_components_with_sizes``) reads
+    it without re-running the solver in a Python stage of its own."""
+    import pyarrow as pa
 
-    schema = StructType(
-        [
-            StructField("node", LongType()),
-            StructField("component", LongType()),
-        ]
+    tbl = edges.toArrow()
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(tbl.column("a").to_pylist(), tbl.column("b").to_pylist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    out = pa.table(
+        {
+            "node": pa.array(nodes, pa.int64()),
+            "component": pa.array([find(n) for n in nodes], pa.int64()),
+        }
     )
-
-    def uf(batches):
-        import pandas as pd
-
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            parent.setdefault(x, x)
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf["a"], pdf["b"]):
-                ra, rb = find(int(a)), find(int(b))
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-        if parent:
-            nodes = list(parent)
-            yield pd.DataFrame(
-                {"node": nodes, "component": [find(n) for n in nodes]}
-            )
-
-    return edges.coalesce(1).mapInPandas(uf, schema=schema)
+    return edges.sparkSession.createDataFrame(out)
 
 
 def _cc_loop_partitions(spark, n_edges: int) -> int:
@@ -264,10 +259,11 @@ def connected_components(
     dedup shuffle.
 
     ``small_graph_cutoff`` (default ``_CC_SINGLE_TASK_EDGES``): edge
-    lists at or below this size solve in one union-find task
-    (``_single_task_components``) instead of the star loop — identical
+    lists at or below this size solve in one driver-side union-find
+    pass (``_driver_components``) instead of the star loop — identical
     output, none of the loop's per-round job latency. Pass ``0`` to
-    force the star loop (the scale path; tests pin both).
+    force the star loop on any non-empty edge list (the scale path;
+    tests pin both).
 
     Raises ``RuntimeError`` if the star fixpoint is not reached within
     ``max_iter`` alternating rounds (2^max_iter node span — never in
@@ -282,30 +278,25 @@ def connected_components(
     # the (often expensive) pair-producing subtree with uncoalesced
     # full-width shuffles. The count both drives the execution and is
     # needed anyway: it sizes the loop's shuffles
-    # (_cc_loop_partitions), routes small graphs to the single-task
-    # solver, and lets a zero-edge corpus skip everything. The CACHED
-    # edge list then feeds the solver directly — the old
-    # checkpoint-from-cache copy was a second driver job per query
-    # that bought nothing the cache doesn't already provide. On the
-    # zero-edge/small paths the persist stays alive for the session
-    # (a few MB at the 256k-edge cutoff; callers running many
-    # components in one long-lived session reclaim it with
-    # ``spark.catalog.clearCache()`` — the bench does between passes);
-    # the loop path unpersists as soon as round 1 has materialized.
+    # (_cc_loop_partitions) and routes small (and empty) graphs to the
+    # driver-side solver. The CACHED edge list then feeds the solver
+    # directly. Both paths release the persist before returning: the
+    # small path once the edges are on the driver, the loop path as
+    # soon as round 1 has materialized — a long-lived session running
+    # many connected_components calls keeps no cache behind.
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
     n_edges = e.count()
     spark = e.sparkSession
-    if n_edges == 0:
-        return e.select(
-            F.col("a").alias("node"), F.col("b").alias("component")
-        )
     cutoff = (
         _CC_SINGLE_TASK_EDGES
         if small_graph_cutoff is None
         else small_graph_cutoff
     )
     if n_edges <= cutoff:
-        return _single_task_components(e)
+        try:
+            return _driver_components(e)
+        finally:
+            e.unpersist(False)
     loop_parts = _cc_loop_partitions(spark, n_edges)
     try:
         cur = e

@@ -275,3 +275,43 @@ def test_cc_loop_never_mutates_session_shuffle_partitions(spark, monkeypatch):
     # cutoff=0 forces the star-contraction loop (the path that mutated)
     got = _cc(spark, [(1, 2), (2, 3), (4, 5)], small_graph_cutoff=0)
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
+
+
+def test_small_graph_path_leaves_no_persisted_rdd(spark):
+    """The small-graph path solves on the driver and releases the
+    persisted edge list before returning: after the query has run, the
+    session's persisted-RDD count is back at its baseline."""
+    from dask_felleskomponenter_spark.operators.graph import (
+        assign_components_with_sizes,
+    )
+
+    jsc = spark.sparkContext._jsc
+    docs = spark.range(8).select(F.col("id").alias("doc_id"))
+    pairs = spark.createDataFrame(
+        [(0, 3), (3, 5), (6, 7)], "id_a bigint, id_b bigint"
+    )
+    baseline = jsc.getPersistentRDDs().size()
+    got = {
+        r["doc_id"]: (r["component"], r["cluster_size"])
+        for r in assign_components_with_sizes(docs, "doc_id", pairs).collect()
+    }
+    assert got == {
+        0: (0, 3), 1: (1, 1), 2: (2, 1), 3: (0, 3), 4: (4, 1), 5: (0, 3),
+        6: (6, 2), 7: (6, 2),
+    }
+    assert jsc.getPersistentRDDs().size() == baseline
+
+
+def test_empty_edge_list_yields_no_components(spark):
+    """Zero edges (all self-loops) go down the small path too: an empty
+    ``(node, component)`` frame, and every doc is its own cluster."""
+    pairs = spark.createDataFrame([(4, 4)], "id_a bigint, id_b bigint")
+    cc = connected_components(pairs)
+    assert cc.dtypes == [("node", "bigint"), ("component", "bigint")]
+    assert cc.collect() == []
+    docs = spark.range(3).select(F.col("id").alias("doc_id"))
+    got = {
+        r["doc_id"]: r["component"]
+        for r in assign_components(docs, "doc_id", pairs).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 2}
