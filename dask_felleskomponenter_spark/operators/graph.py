@@ -33,6 +33,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_felleskomponenter_spark.operators.shuffle import (
+    ensure_absent,
+    fresh_name,
+    nonnull_guard,
+    quoted_col,
+    shuffle_width,
+)
+
 
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint", "long"}
 
@@ -62,24 +70,14 @@ def _require_integral_ids(df: DataFrame, cols: list[str], op: str) -> None:
         )
 
 
-def _nonnull_guard(col: str, dtype, op: str):
-    """Row expression that raises on a NULL id the first time an action
-    touches it. The type guard above is plan-build-time and cannot see
-    VALUES; a NULL id would otherwise drop its edges silently (the
-    ``_u != _v`` filter is never true for NULL) or collapse every
-    NULL-id row into one shared NULL cluster downstream — corruption
-    with no error. Codegen folds the null check to ~free. quoted_col:
-    a dotted id column must resolve exactly, not as a struct path."""
-    from dask_felleskomponenter_spark.operators.shuffle import quoted_col
-
-    return F.when(quoted_col(col).isNotNull(), quoted_col(col)).otherwise(
-        F.raise_error(
-            F.lit(
-                f"{op}: NULL {col!r} — ids must be non-null (a NULL id "
-                "cannot carry edges or name a cluster); assign ids first"
-            )
-        ).cast(dtype)
-    )
+#: Why a NULL id is refused: the type guard above is plan-build-time
+#: and cannot see VALUES; a NULL id would otherwise drop its edges
+#: silently (the ``_u != _v`` filter is never true for NULL) or collapse
+#: every NULL-id row into one shared NULL cluster downstream.
+_NULL_ID_REASON = (
+    "ids must be non-null (a NULL id cannot carry edges or name a "
+    "cluster); assign ids first"
+)
 
 
 def _canonical_edges(
@@ -100,10 +98,10 @@ def _canonical_edges(
     _require_integral_ids(edges, [src, dst], "connected_components")
     types = dict(edges.dtypes)
     e = edges.select(
-        _nonnull_guard(src, types[src], "connected_components")
+        nonnull_guard(src, types[src], "connected_components", _NULL_ID_REASON)
         .cast("long")
         .alias("_u"),
-        _nonnull_guard(dst, types[dst], "connected_components")
+        nonnull_guard(dst, types[dst], "connected_components", _NULL_ID_REASON)
         .cast("long")
         .alias("_v"),
     ).where(F.col("_u") != F.col("_v"))
@@ -175,6 +173,12 @@ _CC_ROWS_PER_PARTITION = 262_144
 _CC_SINGLE_TASK_EDGES = _CC_ROWS_PER_PARTITION
 
 
+#: Alternating star rounds before ``connected_components`` gives up:
+#: a 2^25-node span, never reached in practice — a miss means
+#: pathological input such as id overflow.
+_CC_MAX_ROUNDS = 25
+
+
 def _driver_components(edges: DataFrame) -> DataFrame:
     """Exact components of a small canonical edge list, solved on the
     driver.
@@ -228,24 +232,18 @@ def _cc_loop_partitions(spark, n_edges: int) -> int:
     default, one measured round over 256 edges ran ~200 near-empty
     tasks and task scheduling was 80%+ of the round (1.8 s → 0.3 s
     with the count sized to the data). Derive the count from the
-    materialized edge count instead, capped at the session setting so a
+    materialized edge count instead, capped at ``shuffle_width`` so a
     100 TB edge list still gets the cluster-sized fan-out.
     """
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # "auto" on Connect-style sessions
-        cap = 200
     need = -(-n_edges // _CC_ROWS_PER_PARTITION)  # ceil-div
-    return max(1, min(cap, need))
+    return max(1, min(shuffle_width(spark), need))
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 25,
     pre_canonical: bool = False,
-    small_graph_cutoff: int | None = None,
 ) -> DataFrame:
     """Connected components of an undirected edge list.
 
@@ -258,16 +256,13 @@ def connected_components(
     unordered pair (see ``_canonical_edges``), skipping a full-edge-list
     dedup shuffle.
 
-    ``small_graph_cutoff`` (default ``_CC_SINGLE_TASK_EDGES``): edge
-    lists at or below this size solve in one driver-side union-find
-    pass (``_driver_components``) instead of the star loop — identical
-    output, none of the loop's per-round job latency. Pass ``0`` to
-    force the star loop on any non-empty edge list (the scale path;
-    tests pin both).
+    Edge lists of at most ``_CC_SINGLE_TASK_EDGES`` rows solve in one
+    driver-side union-find pass (``_driver_components``) instead of the
+    star loop — identical output, none of the loop's per-round job
+    latency (tests pin both paths).
 
     Raises ``RuntimeError`` if the star fixpoint is not reached within
-    ``max_iter`` alternating rounds (2^max_iter node span — never in
-    practice; a hit means pathological input like id overflow).
+    ``_CC_MAX_ROUNDS`` alternating rounds.
     """
     from pyspark import StorageLevel
 
@@ -286,21 +281,15 @@ def connected_components(
     # many connected_components calls keeps no cache behind.
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
     n_edges = e.count()
-    spark = e.sparkSession
-    cutoff = (
-        _CC_SINGLE_TASK_EDGES
-        if small_graph_cutoff is None
-        else small_graph_cutoff
-    )
-    if n_edges <= cutoff:
+    if n_edges <= _CC_SINGLE_TASK_EDGES:
         try:
             return _driver_components(e)
         finally:
             e.unpersist(False)
-    loop_parts = _cc_loop_partitions(spark, n_edges)
+    loop_parts = _cc_loop_partitions(e.sparkSession, n_edges)
     try:
         cur = e
-        for _ in range(max_iter):
+        for _ in range(_CC_MAX_ROUNDS):
             # eager=False: the logical plan is truncated (LogicalRDD)
             # immediately, but materialization is deferred to the
             # convergence probe below — whose shuffle-map stage scans
@@ -354,7 +343,8 @@ def connected_components(
                 break
         else:
             raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds"
+                "connected_components did not converge in "
+                f"{_CC_MAX_ROUNDS} rounds"
             )
     finally:
         # Round 1's probe has materialized its checkpoint (or we are
@@ -386,12 +376,6 @@ def assign_components(
     (singleton clusters). ``pre_canonical`` is forwarded to
     ``connected_components`` (skip the edge dedup shuffle when ``pairs``
     already holds one row per unordered pair)."""
-    from dask_felleskomponenter_spark.operators.shuffle import (
-        ensure_absent,
-        fresh_name,
-        quoted_col,
-    )
-
     # out_col is an OUTPUT-contract name (callers select it), so a
     # collision can't be fresh-named away like the internal join
     # columns below — withColumn would silently REPLACE a user column
@@ -408,8 +392,9 @@ def assign_components(
     # one cluster and a keep-one-representative dedup would silently
     # drop all but one of them.
     df = df.withColumn(
-        id_col, _nonnull_guard(id_col, dict(df.dtypes)[id_col],
-                               "assign_components")
+        id_col,
+        nonnull_guard(id_col, dict(df.dtypes)[id_col], "assign_components",
+                      _NULL_ID_REASON),
     )
     # fresh_name: hardcoded helper names would collide with same-named
     # user columns — the join would raise AMBIGUOUS_REFERENCE (or the
@@ -461,18 +446,13 @@ def assign_components_with_sizes(
     of corpus × O(dup-docs) — strictly less data than the unfused
     corpus × corpus join. Equivalence is pinned in
     ``tests/test_graph.py`` against the unfused composition."""
-    from dask_felleskomponenter_spark.operators.shuffle import (
-        ensure_absent,
-        fresh_name,
-        quoted_col,
-    )
-
     ensure_absent(out_col, df, what="out_col")
     ensure_absent(size_col, df, what="size_col")
     _require_integral_ids(df, [id_col], "assign_components_with_sizes")
     df = df.withColumn(
-        id_col, _nonnull_guard(id_col, dict(df.dtypes)[id_col],
-                               "assign_components_with_sizes")
+        id_col,
+        nonnull_guard(id_col, dict(df.dtypes)[id_col],
+                      "assign_components_with_sizes", _NULL_ID_REASON),
     )
     id_name = fresh_name("_cc_id", df, extra={out_col, size_col})
     comp_name = fresh_name("_cc_comp", df, extra={out_col, size_col, id_name})

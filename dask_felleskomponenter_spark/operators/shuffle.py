@@ -10,35 +10,93 @@ the blocked edit-distance join at sf0.1). A user-specified
 contractually not allowed to coalesce — so the window/join stages that
 ride it keep their parallelism while the rest of the plan stays under
 AQE control.
+
+This module is also the one place that reads the session's parallelism
+(``parallelism``, ``shuffle_width``, ``python_width``): every explicit
+fan-out width in the package derives from these three, so the fallback
+for a session that cannot report its cores is decided once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
+
+#: Cores assumed when the session cannot report them (Spark Connect has
+#: no ``sparkContext``): Spark's own ``spark.sql.shuffle.partitions``
+#: default, i.e. the width Spark itself assumes for an unknown cluster.
+#: Erring wide is the scale-safe side — an under-wide pinned exchange
+#: on a large input makes huge tasks, an over-wide Python stage only
+#: pays extra worker forks.
+_UNKNOWN_PARALLELISM = 200
+
+
+def parallelism(spark: SparkSession) -> int:
+    """The cluster's task slots (``defaultParallelism``), or
+    ``_UNKNOWN_PARALLELISM`` when the session has no ``sparkContext``."""
+    try:
+        return spark.sparkContext.defaultParallelism
+    except Exception:  # Spark Connect: no sparkContext
+        return _UNKNOWN_PARALLELISM
+
+
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions``; ``parallelism``
+    when it is not an integer ("auto" on Connect-style sessions)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return parallelism(spark)
+
+
+def python_width(spark: SparkSession) -> int:
+    """Explicit fan-out for multi-stage Python (pandas-UDF /
+    ``mapInPandas``) pipelines: a quarter of the cores, never below 4.
+
+    With ``spark.python.worker.reuse=false`` (required, see session.py)
+    every task of every Python stage forks a worker, a per-task constant
+    that full ``shuffle_width`` multiplies by stages × partitions. The
+    image profile measured 2.4 s at width 32, 1.46 s at 8 and 2.2 s on
+    one task; a quarter keeps the decode parallel at 4× fewer forks per
+    stage. Since the worker daemon drops its zip finders before
+    forking, a 1-task ``mapInPandas`` stage costs about 0.18 s and an
+    8-task one about 0.32 s (4-core box, down from 0.35 s and 0.75 s);
+    the quarter was chosen at the old cost, so re-measure with plan
+    hashes before changing it."""
+    return max(4, parallelism(spark) // 4)
 
 
 def pinned_repartition(df: DataFrame, *cols: str | Column) -> DataFrame:
     """Hash-repartition by ``cols`` with an EXPLICIT partition count
-    (the session's ``spark.sql.shuffle.partitions``), exempting the
-    exchange from AQE byte-based coalescing. Use ahead of count windows
-    and self-joins whose per-row fan-out, not byte size, is the cost.
+    (``shuffle_width``), exempting the exchange from AQE byte-based
+    coalescing. Use ahead of count windows and self-joins whose per-row
+    fan-out, not byte size, is the cost, and right after a scan whose
+    file layout caps parallelism (one-row-group parquet reads as one
+    task per file) when the next stage is CPU-bound per row.
 
     Public API; README "Parallelism escape hatches" documents when NOT
     to use it on a real cluster (byte-heavy pipelines, multi-stage
-    Python pipelines with non-reused workers, mismatched downstream
-    distributions). ``plans/queries.py::scan_fanout`` is the
-    scan-layout-specific wrapper."""
-    try:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # "auto" or unset → physical cores
-        # sparkContext is unavailable on Spark Connect — exactly the
-        # environment where shuffle.partitions='auto' is common — so
-        # the fallback must not dereference it unguarded.
-        try:
-            n = df.sparkSession.sparkContext.defaultParallelism
-        except Exception:
-            n = 200  # Spark's own shuffle-partitions default
-    return df.repartition(n, *cols)
+    Python pipelines with non-reused workers — those take an explicit
+    ``repartition(python_width(spark), key)`` — and mismatched
+    downstream distributions)."""
+    return df.repartition(shuffle_width(df.sparkSession), *cols)
+
+
+def nonnull_guard(name: str, dtype, op: str, reason: str) -> Column:
+    """Column ``name``, raising on a NULL value the first time an action
+    touches it: ``"{op}: NULL '{name}' — {reason}"``.
+
+    Id columns that key per-row decisions (edges, pairs, anti-join
+    screens) cannot be made well-defined for NULL, and a plan-build-time
+    type check cannot see values. Codegen folds the null check to
+    nearly free and column pruning cannot elide it. ``dtype`` is the
+    column's type (the raise branch is cast to it). Takes a name, not a
+    DataFrame, so callers place it in their own projection; quoted_col
+    makes a dotted id resolve exactly, not as a struct path."""
+    from pyspark.sql import functions as F
+
+    return F.when(quoted_col(name).isNotNull(), quoted_col(name)).otherwise(
+        F.raise_error(F.lit(f"{op}: NULL {name!r} — {reason}")).cast(dtype)
+    )
 
 
 def backquoted_name(name: str) -> str:

@@ -239,6 +239,27 @@ def cosine_topk_per_query(
     )
 
 
+def _gemm_blocks(cores: int, est_bytes: int) -> int:
+    """Default block count of ``cosine_neardup_pairs``: the cores rule,
+    ``isqrt(cores // 2)`` (tiles ≈ cores/4, the ``python_width``
+    quarter), never below 2, with a size floor.
+
+    The size floor exists because tile memory is data-sized, not
+    core-sized — deriving blocks from cores alone would hand a
+    low-core machine reading a big corpus a tile of (n/2)² scores.
+    √(bytes/8 MiB) keeps per-tile vector payload roughly √-bounded as
+    the input grows (``est_bytes`` is Catalyst's optimized-plan size
+    estimate; parquet scans report real file bytes). Estimates at or
+    above ~1 EiB are Catalyst's "unknown" default — treated as no
+    information, never as a giant corpus. Capped at 256 blocks: beyond
+    that, tile-count scheduling overhead beats any memory relief this
+    heuristic can offer."""
+    if est_bytes >= (1 << 60):
+        est_bytes = 0
+    size_blocks = min(256, math.isqrt(est_bytes // (8 << 20)))
+    return max(2, math.isqrt(max(cores, 2) // 2), size_blocks)
+
+
 def cosine_neardup_pairs(
     emb_df: DataFrame,
     threshold: float,
@@ -266,8 +287,8 @@ def cosine_neardup_pairs(
     summation order differs in the last ulps).
 
     ``n_blocks=None`` (the default) derives the block count from the
-    session's ``defaultParallelism`` under the Python-stage quarter-width
-    rule (``plans/queries.py::python_fanout``): tiles ≈ cores/4, i.e.
+    session's cores (``shuffle.parallelism``) under the Python-stage
+    quarter-width rule (``shuffle.python_width``): tiles ≈ cores/4, i.e.
     ``n_blocks = max(2, isqrt(cores // 2))``. Every tile is one
     applyInPandas task paying a worker fork + Arrow setup, so tile count
     should track cores — not a constant tuned for either local mode or
@@ -281,8 +302,6 @@ def cosine_neardup_pairs(
     once from the same normalized vectors — so the result is
     byte-identical for any block count (property-tested).
     """
-    import math
-
     import pandas as pd
 
     from pyspark.sql.types import (
@@ -291,21 +310,13 @@ def cosine_neardup_pairs(
         StructType,
     )
 
+    from dask_felleskomponenter_spark.operators.shuffle import (
+        nonnull_guard,
+        parallelism,
+        quoted_col,
+    )
+
     if n_blocks is None:
-        try:
-            cores = emb_df.sparkSession.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect: no sparkContext
-            cores = 16
-        # Size floor alongside the cores rule: tile memory is
-        # data-sized, not core-sized — deriving blocks from cores alone
-        # would hand a low-core machine reading a big corpus a tile of
-        # (n/2)² scores. √(bytes/8 MiB) keeps per-tile vector payload
-        # roughly √-bounded as the input grows (Catalyst's optimized-
-        # plan size estimate; parquet scans report real file bytes).
-        # Estimates at or above ~1 EiB are Catalyst's "unknown" default
-        # — treat as no information, never as a giant corpus. Capped at
-        # 256 blocks: beyond that, tile-count scheduling overhead beats
-        # any memory relief this heuristic can offer.
         try:
             est_bytes = int(
                 emb_df._jdf.queryExecution().optimizedPlan().stats()
@@ -313,30 +324,24 @@ def cosine_neardup_pairs(
             )
         except Exception:  # Spark Connect / stats unavailable
             est_bytes = 0
-        if est_bytes >= (1 << 60):
-            est_bytes = 0
-        size_blocks = min(256, math.isqrt(est_bytes // (8 << 20)))
-        n_blocks = max(2, math.isqrt(max(cores, 2) // 2), size_blocks)
+        n_blocks = _gemm_blocks(parallelism(emb_df.sparkSession), est_bytes)
     if int(n_blocks) < 1:
         # n_blocks=0 aborts at runtime with an opaque pmod
         # DIVIDE_BY_ZERO deep in the explode stage; negative values emit
         # garbage block keys and silently WRONG pairs
         raise ValueError(f"n_blocks must be >= 1, got {n_blocks!r}")
-    # NULL ids raise LOUDLY (graph.py's _nonnull_guard policy): a NULL
-    # id passes the vector filter (xxhash64(NULL) is the seed — a real
+    # NULL ids raise LOUDLY (shuffle.nonnull_guard): a NULL id passes
+    # the vector filter (xxhash64(NULL) is the seed — a real
     # block), then either crashes the pandas tile (string ids: None in
     # `<` comparisons) or worse, Arrow converts the int64-with-null id
     # column to float64 — the NULL becomes NaN and every other id in
     # the tile >= 2^53 is silently ROUNDED, feeding corrupt pair ids to
     # connected_components with no error.
     id_type = emb_df.schema[id_col].dataType
-    guarded_id = F.when(F.col(id_col).isNotNull(), F.col(id_col)).otherwise(
-        F.raise_error(
-            F.lit(
-                f"cosine_neardup_pairs: NULL {id_col!r} — ids must be "
-                "non-null (a NULL id cannot name a pair); assign ids first"
-            )
-        ).cast(id_type)
+    guarded_id = nonnull_guard(
+        id_col, id_type, "cosine_neardup_pairs",
+        "ids must be non-null (a NULL id cannot name a pair); assign ids "
+        "first",
     )
     # NULL embeddings would reach the numpy tile as None (np.stack
     # raises on ragged/None input, killing the whole job) and the JVM
@@ -347,7 +352,7 @@ def cosine_neardup_pairs(
     tagged = emb_df.filter(elements_nonnull(vec_col)).select(
         guarded_id.alias("_id"),
         as_double_vec(vec_col).alias("_v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("_blk"),
+        F.pmod(F.xxhash64(quoted_col(id_col)), F.lit(n_blocks)).alias("_blk"),
     )
     # Each row explodes into its n_blocks+1 block-pair memberships with
     # PURE ARITHMETIC over a tiny constant sequence — a row in block b

@@ -58,6 +58,10 @@ from dask_felleskomponenter_spark.operators.similarity import (
     cosine_topk_per_query,
     l2_norm,
 )
+from dask_felleskomponenter_spark.operators.shuffle import (
+    pinned_repartition,
+    python_width,
+)
 from dask_felleskomponenter_spark.sources import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -104,10 +108,6 @@ def ordered_output(df: DataFrame, *sort_cols: str) -> DataFrame:
     task — the bytes are small exactly when the per-row compute
     (decode, interpreted HOFs) is the cost (operators/shuffle.py).
     """
-    from dask_felleskomponenter_spark.operators.shuffle import (
-        pinned_repartition,
-    )
-
     return pinned_repartition(df, sort_cols[0]).orderBy(*sort_cols)
 
 
@@ -132,58 +132,6 @@ def bounded_sort(df: DataFrame, *sort_cols: str | Column) -> DataFrame:
     Usage: ``.transform(bounded_sort, *keys)`` in place of the final
     ``.orderBy(*keys)``."""
     return df.repartition(1).sortWithinPartitions(*sort_cols)
-
-
-def python_fanout(df: DataFrame, key: str) -> DataFrame:
-    """Moderate pinned fan-out for multi-stage Python pipelines.
-
-    ``scan_fanout`` (full shuffle-partition width) is the right escape
-    hatch for JVM-side per-row compute, but every task of every
-    pandas-UDF / ``mapInPandas`` stage pays a fresh Python worker spawn
-    plus numpy/pandas import (``spark.python.worker.reuse=false`` —
-    required, see session.py), a per-task CONSTANT that full width
-    multiplies by stages × partitions: the image profile measured
-    2.4 s at width 32, 1.46 s at 8, and 2.2 s single-task. A quarter
-    of the cores keeps the decode parallel while paying 4× fewer
-    spawns per stage; the count derives from ``defaultParallelism`` so
-    a cluster still fans out proportionally (never below 4)."""
-    try:
-        cores = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext
-        cores = 16
-    return df.repartition(max(4, cores // 4), key)
-
-
-def scan_fanout(df: DataFrame, key: str) -> DataFrame:
-    """Decouple per-row CPU parallelism from file layout.
-
-    Upstream writers routinely produce one-row-group parquet (this
-    repo's testdata does; so do many real pipelines), which caps the
-    scan at one task per file no matter what
-    ``spark.sql.files.maxPartitionBytes`` says. When the stage after
-    the scan is CPU-dominant per row — interpreted higher-order
-    functions, codec decodes in pandas UDFs, hash walks — that one task
-    serializes the whole query (measured 8× on the repetition profile
-    at sf0.1). One pinned hash exchange right after the scan fans the
-    rows across the cluster; pinned, because the shuffled BYTES are
-    small exactly when the per-row compute is the cost and AQE would
-    coalesce the exchange right back (``operators/shuffle.py``).
-
-    NOT applied to the multi-stage pandas-UDF queries (multimodal,
-    embedding HOFs): with ``spark.python.worker.reuse=false`` (required
-    — see session.py) every task of every Python stage pays a fresh
-    worker spawn + numpy/pandas import, and at small per-row decode
-    cost 32 tasks × N stages of spawns cost more than the decode
-    itself (measured 2.6× against on the video profile). JVM-side
-    per-row compute has no such floor, so the fan-out is pure win
-    there. Public API alongside ``operators/shuffle.py::
-    pinned_repartition``; README "Parallelism escape hatches" has the
-    full when-NOT-to-use guidance for real clusters."""
-    from dask_felleskomponenter_spark.operators.shuffle import (
-        pinned_repartition,
-    )
-
-    return pinned_repartition(df, key)
 
 
 # --- TPC-H-style relational core ----------------------------------------
@@ -761,7 +709,7 @@ def map_fns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed as ``map<string,bigint>``, then ``element_at`` / ``map_keys``
     / ``size`` / ``transform_values`` — sentinel-coalesced so the output
     is NULL-free for the driver comparator."""
-    ev = scan_fanout(load_table(spark, sf_dir, "events"), "event_id")
+    ev = pinned_repartition(load_table(spark, sf_dir, "events"), "event_id")
     m = F.from_json("props", "map<string,bigint>")
     doubled = F.transform_values(m, lambda k, v: v * 2)
     return (
@@ -863,11 +811,11 @@ def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus where the cap actually removes shingles — the declared query
     exercises the exact shape that survives boilerplate-heavy data at
     100 TB, not a benign-data special case."""
-    # scan_fanout: the one-row-group testdata parquet caps the scan at
-    # ONE task, serializing the tokenize+shingle+explode map stage
-    # (measured 1.1 s single-task at sf0.1); the pinned hash exchange
-    # fans the per-row CPU across the cluster before it.
-    docs = scan_fanout(
+    # pinned_repartition: the one-row-group testdata parquet caps the
+    # scan at ONE task, serializing the tokenize+shingle+explode map
+    # stage (measured 1.1 s single-task at sf0.1); the pinned hash
+    # exchange fans the per-row CPU across the cluster before it.
+    docs = pinned_repartition(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         "doc_id",
     )
@@ -902,11 +850,11 @@ def neardup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless: a pathological giant cluster would funnel all its rows
     through one reducer's sort.)"""
     docs = load_table(spark, sf_dir, "documents")
-    # scan_fanout on the pair-generation input only (see
+    # pinned_repartition on the pair-generation input only (see
     # neardup_jaccard_pairs); the assignment side keeps the pruned
     # 1-column doc_id scan.
     pairs = ngram_jaccard_pairs(
-        scan_fanout(docs.select("doc_id", "text"), "doc_id"),
+        pinned_repartition(docs.select("doc_id", "text"), "doc_id"),
         "doc_id", "text", shingle_size=3, threshold=0.6, max_shingle_df=64
     )
     # Fused sizes: counted over the O(edges) cc table, corpus joined
@@ -925,7 +873,7 @@ def neardup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate pairs (rows-only: xxhash64 has no DuckDB
     twin). Banding 16×4 over 64 hashes targets Jaccard ≳ 0.5."""
-    docs = scan_fanout(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = pinned_repartition(load_table(spark, sf_dir, "documents"), "doc_id")
     sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=64, shingle_size=3)
     return lsh_candidate_pairs(sigs, "doc_id", bands=16, rows_per_band=4).orderBy(
         "id_a", "id_b"
@@ -938,7 +886,7 @@ def simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     Uses the explode+bit-vote-aggregate shape (``TX.simhash_signatures``)
     rather than the per-bit higher-order ``F.aggregate`` column form —
     one hash per token, codegen'd votes, 64-long-wide shuffle."""
-    docs = scan_fanout(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = pinned_repartition(load_table(spark, sf_dir, "documents"), "doc_id")
     return TX.simhash_signatures(docs, "doc_id", "text").orderBy("doc_id")
 
 
@@ -954,7 +902,7 @@ def fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape because the driver's row comparator totally orders cell
     values (arrays are unhashable there).
     """
-    docs = scan_fanout(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = pinned_repartition(load_table(spark, sf_dir, "documents"), "doc_id")
     fp = TX.rolling_fingerprint_df(
         docs, "doc_id", "text", out_col="_fp"
     )
@@ -973,7 +921,7 @@ def fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality metrics (token count, BPE-ish token estimate,
     punctuation ratio, stopword ratio, composite score)."""
-    docs = scan_fanout(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = pinned_repartition(load_table(spark, sf_dir, "documents"), "doc_id")
     # token arrays staged ONCE as real columns: the stopword-filter
     # lambda keeps this projection interpreted, where duplicate
     # tokenizer subtrees are NOT common-subexpression-eliminated —
@@ -1002,7 +950,7 @@ def text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language identification per document."""
-    docs = scan_fanout(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = pinned_repartition(load_table(spark, sf_dir, "documents"), "doc_id")
     # lowercased token array staged once (the 4-language vote embeds it
     # per language in an interpreted projection — functions/text.py)
     staged = docs.select(
@@ -1121,7 +1069,8 @@ def pii_redact_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     All built-in ``regexp_count``/``regexp_replace`` — JVM-side, no
     Python; the only cost at 100 TB is the regex scan itself, fused into
     the projection."""
-    docs = scan_fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = pinned_repartition(docs, "doc_id")
     planted = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -1335,10 +1284,10 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection is a FILTER (``doc_id == component`` — the component id IS
     the minimum member), not a window, so a pathological giant cluster
     costs nothing extra."""
-    # scan_fanout: one-row-group parquet caps the scan at ONE task, and
-    # the quality projections would otherwise run single-threaded
-    # inside it (~0.7 s at sf0.1)
-    docs = scan_fanout(
+    # pinned_repartition: one-row-group parquet caps the scan at ONE
+    # task, and the quality projections would otherwise run
+    # single-threaded inside it (~0.7 s at sf0.1)
+    docs = pinned_repartition(
         load_table(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang"
         ),
@@ -1456,7 +1405,7 @@ def profile_lineitem_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         profile_numeric_columns,
     )
 
-    # NO scan_fanout here, deliberately: a pre-aggregate repartition
+    # NO pinned_repartition here, deliberately: a pre-aggregate repartition
     # measured 1.32 s → 0.91 s, but it reorders the double partial sums
     # under round(avg(x), 6) and flipped the oracle compare on
     # l_extendedprice at sf0.01 — the profile's avg is only engine-
@@ -1746,7 +1695,7 @@ def multimodal_decode_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No fan-out here: the FAKM encode/sniff work is light enough that
     # the single-task scan beats paying a repartition exchange plus
     # fresh Python worker spawns per fanned task (A/B measured 1.30 s
-    # plain vs 1.44 s at quarter width; see python_fanout).
+    # plain vs 1.44 s at quarter width; see python_width).
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     @F.pandas_udf("binary")
@@ -1854,13 +1803,11 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         wav_encode,
     )
 
-    # python_fanout: multi-stage pandas-UDF pipeline behind a one-task
-    # scan; quarter-width fan-out balances decode parallelism against
-    # per-task Python worker spawns (see python_fanout)
-    docs = python_fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        "doc_id",
-    )
+    # quarter-width fan-out (python_width): multi-stage pandas-UDF
+    # pipeline behind a one-task scan; balances decode parallelism
+    # against per-task Python worker forks
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.repartition(python_width(spark), "doc_id")
     clean = docs.where(F.col("text").isNotNull()).select(
         "doc_id", F.regexp_replace("text", r"[^ -~]", "").alias("t")
     )
@@ -1915,13 +1862,11 @@ def multimodal_image_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         sniff_media_type,
     )
 
-    # python_fanout: multi-stage pandas-UDF pipeline behind a one-task
-    # scan; quarter-width fan-out balances decode parallelism against
-    # per-task Python worker spawns (see python_fanout)
-    docs = python_fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        "doc_id",
-    )
+    # quarter-width fan-out (python_width): multi-stage pandas-UDF
+    # pipeline behind a one-task scan; balances decode parallelism
+    # against per-task Python worker forks
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.repartition(python_width(spark), "doc_id")
 
     @F.pandas_udf("binary")
     def to_png(text: pd.Series) -> pd.Series:
@@ -1991,13 +1936,11 @@ def multimodal_video_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_profile_stats,
     )
 
-    # python_fanout: multi-stage pandas-UDF pipeline behind a one-task
-    # scan; quarter-width fan-out balances decode parallelism against
-    # per-task Python worker spawns (see python_fanout)
-    docs = python_fanout(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        "doc_id",
-    )
+    # quarter-width fan-out (python_width): multi-stage pandas-UDF
+    # pipeline behind a one-task scan; balances decode parallelism
+    # against per-task Python worker forks
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.repartition(python_width(spark), "doc_id")
 
     @F.pandas_udf("binary")
     def to_avi(text: pd.Series) -> pd.Series:
@@ -3044,7 +2987,8 @@ def contamination_ngram_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting aggregate over (doc_id, hit) rows. Both the hit count and
     the shingle count come from ONE explode pass (left-join marker), so
     the corpus is scanned once."""
-    docs = scan_fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = pinned_repartition(docs, "doc_id")
     # token array staged once (word_shingles' staging note)
     shingled = docs.select(
         "doc_id", TX.tokens_or_null("text").alias("_tk")
@@ -3252,7 +3196,8 @@ def repetition_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, bigram) counts (map-side combined) → per-doc max via a second
     aggregate over the already-reduced pairs (never a window over the
     raw stream); token stats ride the same scan as column expressions."""
-    docs = scan_fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = pinned_repartition(docs, "doc_id")
     # token array staged once (word_shingles' staging note): inline,
     # the filter + two sizes + the bigram HOF re-split the document
     # ~10× in an interpreted projection with no CSE
@@ -3686,7 +3631,7 @@ def resample_ffill_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fans the one-task scan out before the partial aggregate (guide
     # §2.4 "two operations keyed the same way share one exchange";
     # measured 0.80 s → 0.29 s on this subtree, 2 Exchanges → 1).
-    ev = scan_fanout(ev, "user_id")
+    ev = pinned_repartition(ev, "user_id")
     hourly = ev.groupBy("user_id", "h").agg(
         F.round(
             F.sum("v").cast("double") / F.count(F.lit(1)), 6
@@ -3909,10 +3854,12 @@ def raster_contours_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tile-keyed repartition ahead of the Python stages: the contour
     # work parallelizes per tile, not per input split (locally the
     # one-row-group scan would otherwise serialize the whole UDF chain).
-    # Quarter-width (python_fanout), not full scan_fanout: two chained
-    # pandas-UDF stages pay a worker spawn per task per stage — full
-    # width spent more on spawns than on contouring.
-    emb = python_fanout(load_table(spark, sf_dir, "embeddings"), "vec_id")
+    # Quarter width (python_width), not pinned_repartition's full
+    # width: two chained pandas-UDF stages pay a worker spawn per task
+    # per stage — full width spent more on spawns than on contouring.
+    emb = load_table(spark, sf_dir, "embeddings").repartition(
+        python_width(spark), "vec_id"
+    )
     contoured = emb.select(
         "vec_id",
         "label",
@@ -3955,7 +3902,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     The md5 hash family here is the oracle-portable twin; production
     uses xxhash64 (8-byte shuffle key), semantics identical modulo
     ~2^-128 collisions."""
-    docs = scan_fanout(
+    docs = pinned_repartition(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         "doc_id",
     )
@@ -3984,7 +3931,7 @@ def quality_ensemble_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through floor(NULL*20) → least(NULL, 19) = 19, silently counting
     # every NULL doc in the TOP-quality bin and corrupting the
     # cumulative token-budget walk. Both engines filter identically.
-    docs = scan_fanout(
+    docs = pinned_repartition(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter(F.col("text").isNotNull()),
@@ -4125,9 +4072,9 @@ def neardup_crossbatch_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
     )
 
-    # scan_fanout: the signature pipeline is per-row CPU behind a
+    # pinned_repartition: the signature pipeline is per-row CPU behind a
     # one-task scan (one-row-group parquet) — fan it out first.
-    docs = scan_fanout(
+    docs = pinned_repartition(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text", "source")
         .filter(F.col("text").isNotNull()),
@@ -5738,11 +5685,11 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("l_orderkey", "p_brand")
     )
-    # scan_fanout on the group key: the groupBy reuses this exchange
+    # pinned_repartition on the group key: the groupBy reuses this exchange
     # (same clustering), so the exchange count is unchanged but the
     # collect_set aggregation work moves off the one-task scan onto the
     # full width (measured 0.98 s → 0.63 s on this subtree).
-    ob = scan_fanout(ob, "l_orderkey")
+    ob = pinned_repartition(ob, "l_orderkey")
     per_order = ob.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("p_brand")).alias("_bs")
     )
@@ -6153,20 +6100,9 @@ def autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- registry ------------------------------------------------------------
 
-# Declaration order is a VERIFICATION ROTATION, not a semantic grouping.
-# The per-round correctness harness samples the FIRST 50 entries in
-# declaration order, so each round we front-load the queries with the
-# STALEST driver CORRECTNESS rows (round 10 cohort):
-#   positions 0-14  — the 15 round-9 tokenizer-lockstep rewrites whose
-#                     green driver rows predate the oracle change
-#   positions 15-24 — the 10 new round-10 queries (never driver-sampled)
-#   positions 25-49 — head of the stale-first rotation (round-6/7 rows)
-#   remainder       — rest of the rotation
-# Every query remains declared regardless of position; local
-# tests/test_oracle_parity.py always runs all oracle-backed pairs.
+# Declaration order carries no meaning; tests/test_oracle_parity.py
+# runs every oracle-backed pair.
 QUERIES: dict[str, QueryFn] = {
-    # -- round-9 tokenizer-lockstep rewrites: driver rows predate the oracle
-    #    change; front-loaded so CORRECTNESS_r10 re-verifies all 15 ----------
     "fingerprint_documents": fingerprint_documents,
     "fuzzy_blocked_match": fuzzy_blocked_match,
     "lang_id_documents": lang_id_documents,
@@ -6182,7 +6118,6 @@ QUERIES: dict[str, QueryFn] = {
     "try_cast_typed_backfill": try_cast_typed_backfill,
     "udtf_chunk_documents": udtf_chunk_documents,
     "unigram_logprob_score": unigram_logprob_score,
-    # -- new round-10 queries (never driver-sampled) --------------------------
     "percentile_cont_vs_disc_ties": percentile_cont_vs_disc_ties,
     "cumulative_distinct_users": cumulative_distinct_users,
     "gini_revenue_concentration": gini_revenue_concentration,
@@ -6199,7 +6134,6 @@ QUERIES: dict[str, QueryFn] = {
     "wilson_ctr_event_types": wilson_ctr_event_types,
     "decile_lift_monetary": decile_lift_monetary,
     "autocorr_daily_revenue": autocorr_daily_revenue,
-    # -- not sampled in round 9 (stale-first rotation) ------------------------
     "benford_first_digit_prices": benford_first_digit_prices,
     "domain_quota_topn": domain_quota_topn,
     "cdc_latest_per_key": cdc_latest_per_key,
@@ -6277,7 +6211,6 @@ QUERIES: dict[str, QueryFn] = {
     "topk_expensive_orders": topk_expensive_orders,
     "dedup_exact_summary": dedup_exact_summary,
     "filter_or_of_and_revenue": filter_or_of_and_revenue,
-    # -- freshly round-9-sampled (greenest — back of the rotation) ------------
     "set_algebra_token_halves": set_algebra_token_halves,
     "str_to_map_event_kv": str_to_map_event_kv,
     "percentile_disc_prices": percentile_disc_prices,

@@ -18,11 +18,66 @@ that matter on a real cluster:
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "dask-felleskomponenter-spark"
+
+#: Runtime-settable engine defaults, built into ``get_spark`` sessions
+#: and applied by ``tune_session`` to sessions built elsewhere.
+_RUNTIME_DEFAULTS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    # Read parquet naive timestamps as session-TZ TIMESTAMP (LTZ), not
+    # TIMESTAMP_NTZ: with the session pinned to UTC the wall-clock values
+    # are identical, but NTZ is rejected by unix_micros & friends and
+    # DuckDB oracles compare as naive-in-UTC either way.
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+    # The testdata's events.parquet carries TIMESTAMP(NANOS);
+    # without this, any read that doesn't go through load_table (which
+    # also sets it) fails with PARQUET_TYPE_ILLEGAL.
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # InferFiltersFromGenerate synthesizes `size(e) > 0 AND
+    # isnotnull(e)` under every non-outer explode/posexplode and
+    # pushes it through the projections — re-inlining the generator
+    # input expression into an interpreted Filter. For this
+    # engine's staged token/shingle arrays that meant the whole
+    # tokenizer re-ran ~14x per row before the real projection ran
+    # it once more (measured 3x on the inverted-index explode, the
+    # stage every dedup/similarity operator starts with). The
+    # rule's upside — pruning empty-array rows before the generate
+    # — is a row-count nicety this engine's exploders don't need;
+    # its downside scales with the generator expression, which is
+    # exactly what a 100 TB text pipeline makes expensive.
+    (
+        "spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    ),
+)
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on ``spark`` for the body of the ``with`` block.
+
+    On exit, normal or by an exception, each key gets back the value it
+    had before; a key that was unset before is unset again (not pinned
+    to its current default)."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _env_flag(name: str, default: str = "false") -> str:
@@ -116,42 +171,12 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
+    for key, value in _RUNTIME_DEFAULTS:
+        builder = builder.config(key, value)
     builder = (
         builder
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        # Read parquet naive timestamps as session-TZ TIMESTAMP (LTZ), not
-        # TIMESTAMP_NTZ: with the session pinned to UTC the wall-clock values
-        # are identical, but NTZ is rejected by unix_micros & friends and
-        # DuckDB oracles compare as naive-in-UTC either way.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Same nanos handling as tune_session: the driver testdata's
-        # events.parquet carries TIMESTAMP(NANOS), and a get_spark
-        # session must be able to read it directly — not only through
-        # load_table (which also sets this). The two engine-defaults
-        # surfaces must not drift.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # InferFiltersFromGenerate synthesizes `size(e) > 0 AND
-        # isnotnull(e)` under every non-outer explode/posexplode and
-        # pushes it through the projections — re-inlining the generator
-        # input expression into an interpreted Filter. For this
-        # engine's staged token/shingle arrays that meant the whole
-        # tokenizer re-ran ~14x per row before the real projection ran
-        # it once more (measured 3x on the inverted-index explode, the
-        # stage every dedup/similarity operator starts with). The
-        # rule's upside — pruning empty-array rows before the generate
-        # — is a row-count nicety this engine's exploders don't need;
-        # its downside scales with the generator expression, which is
-        # exactly what a 100 TB text pipeline makes expensive.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer."
-            "InferFiltersFromGenerate",
-        )
         # normalize truthy env values — the JVM accepts only true/false
         .config("spark.ui.enabled", _env_flag("SPARK_UI_ENABLED"))
         .config("spark.driver.maxResultSize", "2g")
@@ -215,25 +240,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     timezone) are still settable per `SQLConf` semantics. Static confs are
     left alone.
     """
-    for key, value in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        # the driver's events.parquet carries TIMESTAMP(NANOS); without
-        # this, any read that doesn't go through load_table fails with
-        # PARQUET_TYPE_ILLEGAL (load_table also sets it, but a tuned
-        # session should not depend on load_table having run first)
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # see get_spark: the inferred pre-generate filter re-inlines
-        # expensive generator inputs (tokenizer ~14x per row)
-        (
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer."
-            "InferFiltersFromGenerate",
-        ),
-    ):
+    for key, value in _RUNTIME_DEFAULTS:
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - static conf on some builds

@@ -36,6 +36,8 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from dask_felleskomponenter_spark.session import scoped_conf
+
 #: Index parameters are part of the store identity — changing them
 #: builds a sibling store rather than silently mixing layouts.
 DEFAULT_BITS = 6
@@ -276,10 +278,7 @@ def build_ann_store(
     }
     if os.environ.get("SPARK_GRAFT_ANN_CODEGEN", "").lower() == "on":
         pq_confs = {}
-    prev_confs = {k: spark.conf.get(k, None) for k in pq_confs}
-    for k, val in pq_confs.items():
-        spark.conf.set(k, val)
-    try:
+    with scoped_conf(spark, pq_confs):
         codebooks = build_pq_codebooks(
             emb, dim=dim, m=DEFAULT_PQ_M, k=DEFAULT_PQ_K, iters=2
         )
@@ -290,12 +289,6 @@ def build_ann_store(
             .write.mode("overwrite")
             .parquet(pq_path)
         )
-    finally:
-        for k, val in prev_confs.items():
-            if val is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, val)
 
     meta = {
         "source_size": source_size,

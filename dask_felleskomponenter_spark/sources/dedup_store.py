@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from dask_felleskomponenter_spark.operators.dedup import content_hash
 from dask_felleskomponenter_spark.operators.windows import keep_first
+from dask_felleskomponenter_spark.session import scoped_conf
 
 #: Column names of the history table (fixed schema, versioned by name).
 HASH_COL = "content_sha"
@@ -343,10 +344,9 @@ def compact_history(
     # bucket it touches (measured: 3 ingest appends → a 247-file
     # "compacted" table instead of n_buckets; caught by
     # tests/test_scale_stress.py's populated-history cycle).
-    scan_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev_scan = spark.conf.get(scan_key)
-    spark.conf.set(scan_key, "false")
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+    ):
         # Observation metrics ride the write action: the carried-over
         # row count comes out of the SAME pass that writes the scratch
         # copy — a corpus-sized history is not re-scanned just to
@@ -366,8 +366,6 @@ def compact_history(
             .sortBy(key_col)
             .saveAsTable(scratch)
         )
-    finally:
-        spark.conf.set(scan_key, prev_scan)
     n = obs.get["n_rows"]
     spark.sql(f"DROP TABLE IF EXISTS {old}")
     # The two-rename swap has an unavoidable window (catalog DDL is not
@@ -471,11 +469,9 @@ def _require_nonnull_ids(df: DataFrame, id_col: str) -> DataFrame:
     ids. None of those can be made well-defined for NULL (distinct
     NULL-id documents are indistinguishable in the drop set), so the
     contract is non-null ids — enforced in the row expression itself
-    (a ``when``/``raise_error`` wrapping every downstream read of the
-    id), which whole-stage codegen keeps effectively free and column
-    pruning cannot elide, the same loud-over-silent posture as
-    ``operators/graph.py``'s integral-id guard."""
-    from dask_felleskomponenter_spark.operators.shuffle import quoted_col
+    (``operators/shuffle.py::nonnull_guard`` wrapping every downstream
+    read of the id)."""
+    from dask_felleskomponenter_spark.operators.shuffle import nonnull_guard
 
     # Resolve the field the way Spark resolves the COLUMN — exact match
     # first, then case-insensitive (df.schema['ID'] raises a raw
@@ -493,17 +489,15 @@ def _require_nonnull_ids(df: DataFrame, id_col: str) -> DataFrame:
             f"dedup history store: no column {id_col!r} in "
             f"{df.columns}"
         )
-    guarded = F.when(quoted_col(id_col).isNotNull(), quoted_col(id_col)).otherwise(
-        F.raise_error(
-            F.lit(
-                f"dedup history store: NULL {id_col!r} — per-document "
-                "decisions key on the id (anti-join screens, keep-first "
-                "tie-breaks, provenance), so NULL-id rows are "
-                "undefined; assign ids before screening"
-            )
-        ).cast(field.dataType)
+    return df.withColumn(
+        id_col,
+        nonnull_guard(
+            id_col, field.dataType, "dedup history store",
+            "per-document decisions key on the id (anti-join screens, "
+            "keep-first tie-breaks, provenance), so NULL-id rows are "
+            "undefined; assign ids before screening",
+        ),
     )
-    return df.withColumn(id_col, guarded)
 
 
 def neardup_against_history(

@@ -19,6 +19,8 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dask_felleskomponenter_spark.session import scoped_conf
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -368,13 +370,11 @@ def _compact_parquet_locked(
     # on, 'key=007' reads back as int 7 and rewrites as 'key=7',
     # breaking readers that filter on the original string. Read the
     # values as strings for the round-trip.
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev_infer = spark.conf.get(infer_key)
-    spark.conf.set(infer_key, "false")
-    try:
+    with scoped_conf(
+        spark,
+        {"spark.sql.sources.partitionColumnTypeInference.enabled": "false"},
+    ):
         df = spark.read.parquet(path)
-    finally:
-        spark.conf.set(infer_key, prev_infer)
     staging = f"{path}.staging-{_uuid.uuid4().hex}"
     try:
         if part_cols:

@@ -8,18 +8,26 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from dask_felleskomponenter_spark.operators import graph
 from dask_felleskomponenter_spark.operators.graph import (
     assign_components,
     connected_components,
 )
 
 
-def _cc(spark, edges, **kw):
+def _cc(spark, edges):
     df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
     return {
         r["node"]: r["component"]
-        for r in connected_components(df, **kw).collect()
+        for r in connected_components(df).collect()
     }
+
+
+def _force_star_loop(monkeypatch):
+    """Route every non-empty edge list to the star-contraction loop (the
+    scale path): the driver-side union-find only takes edge lists of at
+    most ``_CC_SINGLE_TASK_EDGES`` rows."""
+    monkeypatch.setattr(graph, "_CC_SINGLE_TASK_EDGES", 0)
 
 
 def _model(edges):
@@ -58,14 +66,14 @@ def test_self_loops_and_duplicates_ignored(spark):
     assert got == {1: 1, 2: 1}
 
 
-def test_long_chain_converges_logarithmically(spark):
+def test_long_chain_converges_logarithmically(spark, monkeypatch):
     """A 64-node path has diameter 63; naive propagation needs 63
-    rounds. Large-star/small-star must finish inside the default
-    max_iter=25 (expected ~log2(64)+O(1)). ``small_graph_cutoff=0``
-    forces the star loop — the default would solve this in the
-    single-task path."""
+    rounds. Large-star/small-star must finish inside
+    ``_CC_MAX_ROUNDS`` = 25 (expected ~log2(64)+O(1)). The star loop is
+    forced — by default this graph is solved on the driver."""
+    _force_star_loop(monkeypatch)
     edges = [(i, i + 1) for i in range(64)]
-    got = _cc(spark, edges, small_graph_cutoff=0)
+    got = _cc(spark, edges)
     assert set(got.values()) == {0}
     assert len(got) == 65
 
@@ -80,19 +88,20 @@ def test_random_graph_matches_union_find(spark):
     assert _cc(spark, edges) == _model(edges)
 
 
-def test_star_loop_matches_union_find(spark):
-    """The scale path (star contraction, forced via cutoff=0) must
-    produce byte-identical components to the default single-task
-    union-find path on the same random graph — the two-path contract
-    the small-graph cutover introduced."""
+def test_star_loop_matches_union_find(spark, monkeypatch):
+    """The scale path (star contraction, forced) must produce
+    byte-identical components to the default driver-side union-find
+    path on the same random graph — the two-path contract the
+    small-graph cutover introduced."""
     rng = random.Random(7)
     nodes = list(range(300))
     edges = [
         (rng.choice(nodes), rng.choice(nodes)) for _ in range(180)
     ]
     edges = [(a, b) for a, b in edges if a != b]
-    star = _cc(spark, edges, small_graph_cutoff=0)
     single = _cc(spark, edges)
+    _force_star_loop(monkeypatch)
+    star = _cc(spark, edges)
     assert star == single == _model(edges)
 
 
@@ -175,14 +184,17 @@ def test_graph_type_guard_names_missing_columns(spark):
         connected_components(pairs, src="id_a", dst="id_z")
 
 
-def test_nonconvergence_raises(spark):
-    """``small_graph_cutoff=0`` forces the star loop — the single-task
-    union-find path has no iteration count to exhaust."""
+def test_nonconvergence_raises(spark, monkeypatch):
+    """One round cannot contract a 64-node path. The star loop is
+    forced — the driver-side union-find has no round count to
+    exhaust."""
+    _force_star_loop(monkeypatch)
+    monkeypatch.setattr(graph, "_CC_MAX_ROUNDS", 1)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "id_a bigint, id_b bigint"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=1, small_graph_cutoff=0)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges)
 
 
 def test_bridge_child_with_two_roots_converges_fully(spark):
@@ -272,8 +284,8 @@ def test_cc_loop_never_mutates_session_shuffle_partitions(spark, monkeypatch):
         return real_set(key, value)
 
     monkeypatch.setattr(spark.conf, "set", guarded)
-    # cutoff=0 forces the star-contraction loop (the path that mutated)
-    got = _cc(spark, [(1, 2), (2, 3), (4, 5)], small_graph_cutoff=0)
+    _force_star_loop(monkeypatch)  # the path that mutated
+    got = _cc(spark, [(1, 2), (2, 3), (4, 5)])
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
 
 

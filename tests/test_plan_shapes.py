@@ -834,7 +834,7 @@ def test_fuzzy_multikey_blocking_has_no_cartesian_hazard(spark):
 
 
 def test_substring_spans_two_fixed_width_shuffles(spark):
-    # ExactSubstr span detection must stay at exactly: the scan_fanout
+    # ExactSubstr span detection must stay at exactly: the scan-side
     # pin, one hash(shingle-hash) exchange for the dup-flag window, one
     # hash(doc-id) exchange shared by the island windows AND both
     # aggregates (clustering on _id satisfies the (_id, _island) and

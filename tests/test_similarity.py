@@ -57,6 +57,26 @@ def test_no_self_or_duplicate_pairs(spark):
     assert all(a < b for a, b in pairs)
 
 
+def test_dotted_id_column_resolves_exactly(spark):
+    """A column literally named ``vec.id`` is a legal id: the NULL
+    guard and the block hash must not read it as a struct-field path
+    (a bare ``F.col`` raised UNRESOLVED_COLUMN here)."""
+    import pytest
+
+    vecs = {1: [1.0, 0.0], 2: [0.99, 0.01], 3: [0.0, 1.0], 4: [0.01, 1.0]}
+    df = spark.createDataFrame(
+        [(i, v) for i, v in vecs.items()], "`vec.id` long, embedding array<double>"
+    )
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in cosine_neardup_pairs(df, 0.9, n_blocks=2, id_col="vec.id").collect()
+    }
+    assert got == _brute_force(vecs, 0.9) == {(1, 2), (3, 4)}
+    with_null = df.union(spark.createDataFrame([(None, [1.0, 0.0])], df.schema))
+    with pytest.raises(Exception, match="NULL 'vec.id'"):
+        cosine_neardup_pairs(with_null, 0.9, n_blocks=2, id_col="vec.id").collect()
+
+
 class TestPartitionLocalTopk:
     """The shuffle-free pre-reduction feeding the per-query merge
     (VERDICT r2: the merge window must never see the full scored set)."""
