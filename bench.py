@@ -36,9 +36,12 @@ fit a bounded tail capture, carrying the total and the slowest queries.
 Why min-of-N: the bench box is multi-tenant and a single pass can catch
 a transient I/O/CPU spike that inflates one query 5-20× (measured 45s ↔
 300s full-set swings with identical plans). Two-rounds-in-one-session
-profiling shows zero in-session degradation (round 2 is uniformly
-faster — warm codegen), so the minimum over passes measures the engine
-and discards the neighbors.
+profiling shows zero in-session degradation (round 2 is faster: the
+JIT is warm, and the session's codegen class cache, sized by
+``session.CODEGEN_CACHE_ENTRIES``, holds every class round 1 compiled;
+at Spark's default 100 entries round 2 recompiled nearly all of them),
+so the minimum over passes measures the engine and discards the
+neighbors.
 """
 
 from __future__ import annotations

@@ -50,6 +50,18 @@ def _safe_norm(a: Column) -> Column:
     return F.greatest(l2_norm(a), F.lit(1e-12))
 
 
+def _exact_mean(x: Column) -> Column:
+    """Mean of a double column that does not depend on how the rows are
+    partitioned: a double ``avg`` adds partial sums in task order, so
+    its last ulp — and with it a quantizer's cell assignment — changed
+    with the core count. The summands here are unit-vector components
+    in [-1, 1]; as decimal(38,18) they add exactly (20 integer digits
+    never overflow), and the one rounding, the final division, is the
+    same on every layout. A non-finite summand (NaN/Inf element) casts
+    to NULL and is skipped instead of turning the mean into NaN."""
+    return F.avg(x.cast("decimal(38,18)")).cast("double")
+
+
 def elements_nonnull(col: str | Column) -> Column:
     """True iff the array is non-NULL and contains no NULL element.
 
@@ -483,8 +495,8 @@ def build_ivf_centroids(
     """Coarse-quantizer training for an IVF index: deterministic seeding
     (the ``n_cells`` lowest-id vectors) + ``iters`` distributed Lloyd
     steps (assignment is a JVM expression; the mean reduces via
-    posexplode → per-(cell, dim) avg, so only ``n_cells × dim`` numbers
-    ever reach the driver).
+    posexplode → per-(cell, dim) exact mean, so only ``n_cells × dim``
+    numbers ever reach the driver).
 
     This is an INDEX-BUILD step — it runs Spark jobs, like writing a
     bucketed table. Never call it inside a query path; persist the
@@ -552,7 +564,7 @@ def build_ivf_centroids(
                 F.col("_n"),
             )
             .groupBy("_cell", "_dim")
-            .agg(F.avg(F.col("_x") / F.col("_n")).alias("_m"))
+            .agg(_exact_mean(F.col("_x") / F.col("_n")).alias("_m"))
             .collect()
         )
         by_cell: dict[int, dict[int, float]] = {}
@@ -919,8 +931,9 @@ def build_pq_codebooks(
     assignment reuses the encoder's per-subspace argmin columns
     (staged-norm, small expression trees), the assigned subvectors
     explode into (subspace, code, dim, value) and the means reduce via
-    a map-side-combinable avg, so only m×k×d numbers reach the driver
-    per iteration. Empty clusters keep their previous centroid.
+    a map-side-combinable exact mean (``_exact_mean``: the same
+    codebooks at every core count), so only m×k×d numbers reach the
+    driver per iteration. Empty clusters keep their previous centroid.
     Production note: PQ training conventionally runs on a bounded
     sample (FAISS trains on ≲256·k points per subquantizer); pass
     ``emb_df.orderBy(id).limit(n)`` for that — the encode step is the
@@ -983,7 +996,7 @@ def build_pq_codebooks(
         means = (
             assign.select("_j", "_c", F.posexplode("_sv").alias("_i", "_x"))
             .groupBy("_j", "_c", "_i")
-            .agg(F.avg("_x").alias("_mu"))
+            .agg(_exact_mean(F.col("_x")).alias("_mu"))
             .collect()
         )
         new_cb = [[list(c) for c in cb] for cb in codebooks]

@@ -14,6 +14,8 @@ that matter on a real cluster:
 - Session timezone pinned to UTC so timestamp semantics are stable across
   driver environments (parquet naive micros == displayed wall-clock).
 - Arrow enabled for any pandas interchange.
+- The compiled-codegen class cache sized to the declared set's working
+  set, so a session compiles each generated class once.
 """
 
 from __future__ import annotations
@@ -24,6 +26,18 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "dask-felleskomponenter-spark"
+
+#: Entries in Spark's compiled whole-stage-codegen class cache
+#: (``spark.sql.codegen.cache.maxEntries``, default 100). One pass of
+#: the declared 158-query set at sf0.01 with an unbounded cache compiles
+#: about 1750 distinct classes (1731-1755, `tools/codegen_census.py`).
+#: At the default size the LRU cache evicts each class before its next
+#: use: a second pass compiled 2299 classes again with Janino, and the
+#: JVM JIT-compiled each one anew. At this size a repeat pass recompiles
+#: 16-21 classes, from sources that embed an AQE-assigned
+#: ``codegenStageId`` (see README). 2.3x headroom over the working set.
+#: Static conf.
+CODEGEN_CACHE_ENTRIES = 4096
 
 #: Runtime-settable engine defaults, built into ``get_spark`` sessions
 #: and applied by ``tune_session`` to sessions built elsewhere.
@@ -188,6 +202,12 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
+        # Compile each generated class once per session, not once per
+        # pass (see CODEGEN_CACHE_ENTRIES). Static conf: applies when
+        # this factory creates the JVM.
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
         # Fork a fresh Python worker per task instead of reusing daemons:
         # long-lived reused workers accumulate interpreter state from
         # earlier Arrow/pandas stages and the next numpy-using
@@ -238,7 +258,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     The verification driver hands us its own session; runtime confs (AQE,
     timezone) are still settable per `SQLConf` semantics. Static confs are
-    left alone.
+    left alone: in particular the codegen class cache keeps the size its
+    builder gave it (Spark's default 100 entries, which the declared set
+    overflows on every pass). Only the code that builds the session can
+    raise it, by setting ``spark.sql.codegen.cache.maxEntries`` (see
+    ``CODEGEN_CACHE_ENTRIES``).
     """
     for key, value in _RUNTIME_DEFAULTS:
         try:
@@ -246,3 +270,12 @@ def tune_session(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - static conf on some builds
             pass
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Number of generated classes this session's JVM has compiled so
+    far (Spark's ``CodegenMetrics`` compilation-time histogram count).
+    A cache hit does not compile, so the rise over a repeated workload
+    counts its recompiles."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -1,5 +1,6 @@
-"""Session helpers: the scoped conf override and the runtime defaults
-shared by ``get_spark`` and ``tune_session``."""
+"""Session helpers: the scoped conf override, the runtime defaults
+shared by ``get_spark`` and ``tune_session``, and the codegen class
+cache size ``get_spark`` builds in."""
 
 from __future__ import annotations
 
@@ -7,8 +8,11 @@ from types import SimpleNamespace
 
 import pytest
 
+from dask_felleskomponenter_spark import session as session_mod
 from dask_felleskomponenter_spark.session import (
     _RUNTIME_DEFAULTS,
+    CODEGEN_CACHE_ENTRIES,
+    codegen_compiles,
     scoped_conf,
     tune_session,
 )
@@ -54,3 +58,66 @@ def test_get_spark_and_tune_session_apply_the_same_defaults(spark):
         set=lambda key, value: calls.append((key, value))
     )))
     assert tuple(calls) == _RUNTIME_DEFAULTS
+
+
+CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records every conf and
+    returns it from ``getOrCreate`` instead of starting a JVM."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, _name):
+        return self
+
+    def master(self, _master):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+def test_get_spark_sizes_codegen_cache_and_extra_conf_overrides(
+    spark, monkeypatch
+):
+    # the fixture session is built by get_spark
+    assert spark.conf.get(CACHE_KEY) == str(CODEGEN_CACHE_ENTRIES)
+
+    def built_conf(**kwargs):
+        monkeypatch.setattr(
+            session_mod,
+            "SparkSession",
+            SimpleNamespace(builder=_RecordingBuilder()),
+        )
+        return session_mod.get_spark(**kwargs)
+
+    assert built_conf()[CACHE_KEY] == str(CODEGEN_CACHE_ENTRIES)
+    assert built_conf(extra_conf={CACHE_KEY: "64"})[CACHE_KEY] == "64"
+
+
+def test_repeat_pass_compiles_no_generated_class(spark):
+    """A workload of more distinct generated classes than Spark's
+    default cache (100 entries) holds compiles each class once per
+    session: the second pass is all cache hits. At the default size
+    the cache evicts every class before its reuse and the second pass
+    recompiles them all."""
+
+    def one_pass():
+        # one distinct whole-stage class (plus its collect projection)
+        # per literal pair
+        for i in range(80):
+            spark.range(4).selectExpr(f"id * {i + 2} + {i} AS c").collect()
+
+    before = codegen_compiles(spark)
+    one_pass()
+    first = codegen_compiles(spark) - before
+    assert first > 100  # more than the default cache holds
+    one_pass()
+    assert codegen_compiles(spark) - before - first == 0
