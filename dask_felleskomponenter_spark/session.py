@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -36,8 +37,10 @@ DEFAULT_APP_NAME = "dask-felleskomponenter-spark"
 #: JVM JIT-compiled each one anew. At this size a repeat pass recompiles
 #: 16-21 classes, from sources that embed an AQE-assigned
 #: ``codegenStageId`` (see README). 2.3x headroom over the working set.
-#: Static conf.
+#: Static conf: ``get_spark`` builds it in, ``tune_session`` sets it on
+#: a session that has not compiled yet.
 CODEGEN_CACHE_ENTRIES = 4096
+_CODEGEN_CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
 
 #: Runtime-settable engine defaults, built into ``get_spark`` sessions
 #: and applied by ``tune_session`` to sessions built elsewhere.
@@ -205,9 +208,7 @@ def get_spark(
         # Compile each generated class once per session, not once per
         # pass (see CODEGEN_CACHE_ENTRIES). Static conf: applies when
         # this factory creates the JVM.
-        .config(
-            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
-        )
+        .config(_CODEGEN_CACHE_KEY, str(CODEGEN_CACHE_ENTRIES))
         # Fork a fresh Python worker per task instead of reusing daemons:
         # long-lived reused workers accumulate interpreter state from
         # earlier Arrow/pandas stages and the next numpy-using
@@ -257,18 +258,39 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-built session.
 
     The verification driver hands us its own session; runtime confs (AQE,
-    timezone) are still settable per `SQLConf` semantics. Static confs are
-    left alone: in particular the codegen class cache keeps the size its
-    builder gave it (Spark's default 100 entries, which the declared set
-    overflows on every pass). Only the code that builds the session can
-    raise it, by setting ``spark.sql.codegen.cache.maxEntries`` (see
-    ``CODEGEN_CACHE_ENTRIES``).
+    timezone) are still settable per `SQLConf` semantics. The codegen
+    class cache size (``spark.sql.codegen.cache.maxEntries``) is a
+    static conf that ``spark.conf.set`` refuses, but Spark builds the
+    cache from the session's conf at its first compile. Until then the
+    session conf is written directly and the cache gets
+    ``CODEGEN_CACHE_ENTRIES``. A session that has already compiled keeps
+    the cache it has (a bare builder's is 100 entries, which the
+    declared set overflows on every pass): this warns and leaves the
+    conf alone. A session without a JVM (Spark Connect) gets the
+    runtime defaults only.
     """
     for key, value in _RUNTIME_DEFAULTS:
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - static conf on some builds
             pass
+    try:
+        conf = spark._jsparkSession.sessionState().conf()
+    except AttributeError:  # no JVM: Spark Connect or a stand-in
+        return spark
+    if int(conf.getConfString(_CODEGEN_CACHE_KEY)) >= CODEGEN_CACHE_ENTRIES:
+        return spark
+    if codegen_compiles(spark) == 0:
+        conf.setConfString(_CODEGEN_CACHE_KEY, str(CODEGEN_CACHE_ENTRIES))
+    else:
+        warnings.warn(
+            f"{_CODEGEN_CACHE_KEY} is fixed once the session compiles "
+            f"generated code; this session keeps "
+            f"{conf.getConfString(_CODEGEN_CACHE_KEY)} entries. Call "
+            f"tune_session before the first query to get "
+            f"{CODEGEN_CACHE_ENTRIES}.",
+            stacklevel=2,
+        )
     return spark
 
 

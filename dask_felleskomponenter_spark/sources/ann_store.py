@@ -270,15 +270,11 @@ def build_ann_store(
     # 1g driver JVM a bare `SparkSession.builder.getOrCreate()` gives
     # (measured; the verification driver runs exactly such a session).
     # Interpreted eval of the same expressions is memory-flat and this
-    # is a one-time build step. Set SPARK_GRAFT_ANN_CODEGEN=on to keep
-    # codegen when the driver heap is sized (session.py's 16g default).
-    pq_confs = {
+    # is a one-time build step, so it runs interpreted whatever the heap.
+    with scoped_conf(spark, {
         "spark.sql.codegen.wholeStage": "false",
         "spark.sql.codegen.factoryMode": "NO_CODEGEN",
-    }
-    if os.environ.get("SPARK_GRAFT_ANN_CODEGEN", "").lower() == "on":
-        pq_confs = {}
-    with scoped_conf(spark, pq_confs):
+    }):
         codebooks = build_pq_codebooks(
             emb, dim=dim, m=DEFAULT_PQ_M, k=DEFAULT_PQ_K, iters=2
         )

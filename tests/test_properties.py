@@ -1478,85 +1478,66 @@ def test_salted_agg_dotted_output_name_matches_plain(spark):
     )
 
 
-def test_bench_prior_readers_skip_non_object_json(tmp_path, monkeypatch):
-    """Round-8 finding: a prior file whose top-level JSON is a list
-    reached .get() and crashed the bench AFTER the timing loop.
-    Round-9 refinement: an IMPLICIT candidate is still silently
-    skipped, but an EXPLICIT BENCH_PRIOR_FILE now exits LOUDLY — a
-    typo'd prior silently disabling the outlier protocol was the
-    worse failure."""
-    import importlib.util
-    import sys
-
-    import pytest
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_under_test", "/root/repo/bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    sys.modules["bench_under_test"] = bench
-    spec.loader.exec_module(bench)
-
-    bad = tmp_path / "prior.json"
-    bad.write_text('["not", "an", "object"]')
-    # implicit candidate path (no env): tolerant skip
-    assert bench._read_json_dict(str(bad)) is None
-    # explicit env: loud exit, not a silent {}
-    monkeypatch.setenv("BENCH_PRIOR_FILE", str(bad))
-    with pytest.raises(SystemExit, match="not a JSON object"):
-        bench.load_prior(0.1)
-    # a usable explicit prior still loads
-    good = tmp_path / "good.json"
-    good.write_text('{"sf": 0.1, "queries": {"q": 1.5}}')
-    monkeypatch.setenv("BENCH_PRIOR_FILE", str(good))
-    assert bench.load_prior(0.1) == {"q": 1.5}
-    with pytest.raises(SystemExit, match="records sf"):
-        bench.load_prior(0.01)
-
-
-def test_bench_hot_box_reruns_outliers_in_process(tmp_path):
-    """Round-10 protocol: on a hot box the outlier protocol used to be
-    SKIPPED entirely (four consecutive driver captures recorded
-    n_isolated_reruns: 0 with hot_box: true — the official perf record
-    stayed noise-dominated with zero attribution). Now a hot run
-    re-times >1.3×-prior queries IN-PROCESS (min-of-3) and records both
-    numbers with mode "inprocess_hot". Forced hot via BENCH_MAX_LOAD=0
-    and an artificially tiny prior, on the sf0.001 smoke data."""
+def test_bench_records_cpu_seconds_and_plan_hash_per_query(tmp_path):
+    """bench.py attributes a timing drift with the plan hash and the
+    CPU seconds of the Spark process tree, taken from the pass whose
+    wall time it keeps. The summary line carries the CPU total."""
+    import json as _json
+    import re as _re
     import subprocess as sp
 
-    prior = tmp_path / "prior.json"
-    prior.write_text(
-        '{"sf": 0.001, "queries": {"q6_forecast_revenue": 0.000001}}'
-    )
+    from tests.conftest import REPO_ROOT, SF_DIR
+
+    names = ["q6_forecast_revenue", "dedup_exact_docs"]
     out_file = tmp_path / "result.json"
     env = dict(
         os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        BENCH_QUERIES="q6_forecast_revenue",
+        SPARK_GRAFT_SF_DIR=SF_DIR,
+        BENCH_QUERIES=",".join(names),
         BENCH_REPEATS="1",
-        BENCH_MAX_LOAD="0",  # any live box reads as hot
-        BENCH_PRIOR_FILE=str(prior),
         BENCH_RESULT_FILE=str(out_file),
     )
     proc = sp.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(REPO_ROOT, "bench.py")],
         env=env,
         capture_output=True,
         text=True,
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    import json as _json
 
     result = _json.loads(out_file.read_text())
-    assert result.get("hot_box") is True
-    rerun = result["isolated_reruns"]["q6_forecast_revenue"]
-    assert rerun["mode"] == "inprocess_hot"
-    assert rerun["prior"] == 0.000001
-    assert rerun["sampled"] > 0 and rerun["isolated"] > 0
-    # summary line reports the rerun count
+    for q in names:
+        assert result["queries"][q] > 0
+        assert result["cpu_s"][q] > 0
+        assert _re.fullmatch(r"[0-9a-f]{12}", result["plan_hashes"][q])
     summary = _json.loads(proc.stdout.strip().splitlines()[-1])
-    assert summary["n_isolated_reruns"] == 1
+    assert summary["value"] == result["value"]
+    assert summary["cpu_s"] == round(sum(result["cpu_s"].values()), 3)
+    assert "n_isolated_reruns" not in summary
+
+
+def test_bench_plan_hash_ignores_jvm_wide_counters(spark):
+    """Building the same query twice in one session must hash the same.
+    Python-built lambda variables (``x_17``) and common subexpressions
+    (``_common_expr_4``) take their suffix from JVM-wide counters, and a
+    scan's DataFilters text is cut at a length that moves with the
+    expression-id widths; none of them is a plan change."""
+    import importlib.util
+
+    from tests.conftest import REPO_ROOT, SF_DIR
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_under_test", os.path.join(REPO_ROOT, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    from dask_felleskomponenter_spark.plans import QUERIES
+
+    for name in ("map_fns_events", "try_cast_typed_backfill",
+                 "q2_min_cost_supplier"):
+        first = bench.plan_hash(QUERIES[name](spark, SF_DIR))
+        assert bench.plan_hash(QUERIES[name](spark, SF_DIR)) == first, name
 
 
 def test_window_output_columns_raise_on_collision(spark):

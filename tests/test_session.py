@@ -1,9 +1,12 @@
 """Session helpers: the scoped conf override, the runtime defaults
 shared by ``get_spark`` and ``tune_session``, and the codegen class
-cache size ``get_spark`` builds in."""
+cache size ``get_spark`` builds in and ``tune_session`` sets on a
+session that has not compiled yet."""
 
 from __future__ import annotations
 
+import subprocess
+import sys
 from types import SimpleNamespace
 
 import pytest
@@ -16,6 +19,7 @@ from dask_felleskomponenter_spark.session import (
     scoped_conf,
     tune_session,
 )
+from tests.conftest import REPO_ROOT
 
 SET_KEY = "spark.sql.sources.partitionColumnTypeInference.enabled"
 UNSET_KEY = "spark.sql.codegen.factoryMode"
@@ -121,3 +125,56 @@ def test_repeat_pass_compiles_no_generated_class(spark):
     assert first > 100  # more than the default cache holds
     one_pass()
     assert codegen_compiles(spark) - before - first == 0
+
+
+_BARE_SESSION_REPEAT_PASS = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from dask_felleskomponenter_spark.session import codegen_compiles, tune_session
+
+spark = tune_session(SparkSession.builder.master("local[2]").getOrCreate())
+
+
+def one_pass():
+    for i in range(80):
+        spark.range(4).selectExpr(f"id * {i + 2} + {i} AS c").collect()
+
+
+before = codegen_compiles(spark)
+one_pass()
+first = codegen_compiles(spark) - before
+one_pass()
+print(first, codegen_compiles(spark) - before - first)
+spark.stop()
+"""
+
+
+def test_tune_session_sizes_codegen_cache_of_bare_session():
+    """A session from a bare builder (a fresh JVM, Spark's 100-entry
+    cache) passed through tune_session before its first query compiles
+    each generated class once: the repeat pass is all cache hits."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _BARE_SESSION_REPEAT_PASS, REPO_ROOT],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    first, second = map(int, proc.stdout.split()[-2:])
+    assert first > 100  # more than the default cache holds
+    assert second == 0
+
+
+def test_tune_session_warns_after_first_compile(spark, monkeypatch):
+    """Once the JVM has compiled, the cache size is fixed: tune_session
+    warns and leaves the conf as it was."""
+    spark.range(4).selectExpr("id * 7 AS c").collect()
+    assert codegen_compiles(spark) > 0
+    before = spark.conf.get(CACHE_KEY)
+    monkeypatch.setattr(
+        session_mod, "CODEGEN_CACHE_ENTRIES", 2 * int(before)
+    )
+    with pytest.warns(UserWarning, match=CACHE_KEY):
+        tune_session(spark)
+    assert spark.conf.get(CACHE_KEY) == before

@@ -3,7 +3,8 @@
 passes in one ``get_spark`` session.
 
 Usage:
-    python tools/codegen_census.py [--sf-dir DIR] [--cache-entries N]
+    python tools/codegen_census.py [--sf-dir DIR]
+                                   [--cache-entries N | --bare]
                                    [query ...]
 
 Runs the named queries (default: the whole declared set) twice, in
@@ -20,6 +21,11 @@ AQE-assigned ``// codegenStageId=N`` recompile. AQE numbers stages in
 the order they complete, so the same stage can get another N on the
 next run, another source text, and a cache miss. ``--cache-entries
 100`` reproduces Spark's default size.
+
+``--bare`` runs the queries the way an outside caller of the entry
+contract does: through ``__spark_entry__.queries()`` on a plain
+``SparkSession.builder`` session, so the cache gets only the size
+``tune_session`` gives it.
 
 Default data dir: ``$SPARK_GRAFT_SF_DIR`` or /root/testdata/sf0.01.
 """
@@ -56,8 +62,15 @@ def main() -> None:
         type=int,
         help="spark.sql.codegen.cache.maxEntries (default: the session's)",
     )
+    ap.add_argument(
+        "--bare",
+        action="store_true",
+        help="run __spark_entry__.queries() on a plain builder session",
+    )
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
+    if args.bare and args.cache_entries is not None:
+        ap.error("--bare keeps the cache size tune_session gives")
 
     from dask_felleskomponenter_spark.plans import QUERIES
     from dask_felleskomponenter_spark.session import codegen_compiles, get_spark
@@ -67,12 +80,24 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {', '.join(unknown)}")
 
-    extra = {"spark.ui.showConsoleProgress": "false"}
-    if args.cache_entries is not None:
-        extra["spark.sql.codegen.cache.maxEntries"] = str(args.cache_entries)
-    spark = get_spark(app_name="dfs-codegen-census", extra_conf=extra)
+    if args.bare:
+        from pyspark.sql import SparkSession
+
+        from __spark_entry__ import queries as entry_queries
+
+        queries = entry_queries()
+        spark = SparkSession.builder.master(
+            f"local[{os.cpu_count()}]"
+        ).getOrCreate()
+    else:
+        queries = QUERIES
+        extra = {"spark.ui.showConsoleProgress": "false"}
+        if args.cache_entries is not None:
+            extra["spark.sql.codegen.cache.maxEntries"] = str(
+                args.cache_entries
+            )
+        spark = get_spark(app_name="dfs-codegen-census", extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
-    entries = spark.conf.get("spark.sql.codegen.cache.maxEntries", "100")
 
     counts: dict[str, list[int]] = {n: [] for n in names}
     seconds = []
@@ -80,12 +105,13 @@ def main() -> None:
         t0 = time.perf_counter()
         for name in names:
             before = codegen_compiles(spark)
-            QUERIES[name](spark, args.sf_dir).write.format("noop").mode(
+            queries[name](spark, args.sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             counts[name].append(codegen_compiles(spark) - before)
         seconds.append(time.perf_counter() - t0)
 
+    entries = spark.conf.get("spark.sql.codegen.cache.maxEntries", "100")
     width = max(len(n) for n in names)
     print(f"{'query':<{width}}  pass1  pass2")
     for name in names:
