@@ -70,16 +70,23 @@ def plan_hash(df) -> str:
     earlier. A scan's ``DataFilters`` text is dropped: Spark cuts it at
     100 characters before the ids are normalized, so where it is cut
     moves with the id widths, and the Filter above the scan prints the
-    same predicates in full. With AQE on this is the pre-execution plan
-    (``AdaptiveSparkPlan isFinalPlan=false`` + the initial plan), which
-    is exactly what attribution needs: if the hash is unchanged between
-    rounds, a timing drift is environmental, not a plan change.
+    same predicates in full. The cut text can hold line breaks (a
+    ``trim`` whitespace-set literal), so the match spans lines. With AQE
+    on this is the pre-execution plan (``AdaptiveSparkPlan
+    isFinalPlan=false`` + the initial plan), which is exactly what
+    attribution needs: if the hash is unchanged between rounds, a
+    timing drift is environmental, not a plan change.
     """
-    s = df._jdf.queryExecution().executedPlan().toString()
+    return plan_digest(df._jdf.queryExecution().executedPlan().toString())
+
+
+def plan_digest(s: str) -> str:
+    """``plan_hash`` of a physical plan's text."""
     s = re.sub(r"#\d+", "#", s)
     s = re.sub(r"(plan_id|id|subquery)=#?\d+", r"\1=", s)
     s = re.sub(r"(lambda [xyz]|_common_expr)_\d+", r"\1", s)
-    s = re.sub(r"DataFilters: \[.*?(\]|\.\.\.), Format:", "Format:", s)
+    s = re.sub(r"DataFilters: \[.*?(\]|\.\.\.), Format:", "Format:", s,
+               flags=re.S)
     return hashlib.sha1(s.encode()).hexdigest()[:12]
 
 

@@ -4,8 +4,15 @@ Each entry is ``name -> (spark, sf_dir) -> DataFrame`` and has either a
 DuckDB oracle twin in ``plans/oracles.py`` (hash-checked by the driver)
 or is marked rows-only (non-SQL-expressible: xxhash64-based sketches).
 
+Queries declare their output order; they do not end in one. The
+``@query(*order, shape=..., limit=...)`` decorator registers a builder
+in ``QUERIES`` under its function name, and ``finish`` gives the built
+DataFrame that order in the declared shape (the shape policy is
+``finish``'s docstring).
+
 Determinism rules (BASELINE.md):
-- every query ends with a total-order ``ORDER BY``;
+- every query declares a total output order, except single-row
+  aggregates, which declare none;
 - money aggregates are computed in DECIMAL (exact, order-independent)
   and only then cast to double — parallel double summation would make
   hash comparison against a serial oracle flaky;
@@ -20,6 +27,7 @@ broadcast, aggregations are partial-before-shuffle by construction
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 import pandas as pd
@@ -91,51 +99,96 @@ def dsum(col: Column) -> Column:
     return F.sum(col).cast("double")
 
 
-def ordered_output(df: DataFrame, *sort_cols: str) -> DataFrame:
-    """Total-order a declared query's output with an exchange in front.
+# --- registry: each query declares its output order ----------------------
 
-    Spark's global ``orderBy`` range-partitions by *sampling its child*;
-    when the child is an expensive map-only plan (pandas-UDF decode,
-    interpreted higher-order functions, UDTFs) the sampling job
-    re-executes the entire lineage — measured 2× the whole query. A hash
-    ``repartition`` on the leading sort key materializes the expensive
-    stage once (AQE stage boundary), so the range sampler reads shuffle
-    output instead of recomputing. At scale this is also the shape you
-    want: materialize expensive map work before a range exchange.
+QUERIES: dict[str, QueryFn] = {}
 
-    The repartition is PINNED (explicit partition count) so AQE's
-    byte-based coalescing can't collapse the expensive map stage to one
-    task — the bytes are small exactly when the per-row compute
-    (decode, interpreted HOFs) is the cost (operators/shuffle.py).
+SHAPES = ("sorted", "bounded", "staged")
+
+
+def finish(
+    df: DataFrame, order: tuple[str, ...], shape: str, limit: int | None
+) -> DataFrame:
+    """Give a declared query's output its declared total order; the one
+    owner of the ordering policy.
+
+    ``order`` holds column names, ``"x DESC"`` for descending. Ascending
+    keys sort NULLs first (Spark's default); the oracles pin ``NULLS
+    FIRST`` to match, since outputs are hashed in emitted order.
+
+    - No order: the output is one row (a global aggregate) and is
+      returned as is.
+    - ``limit=k`` (top-k): ``orderBy(...).limit(k)``. Spark plans it as
+      TakeOrderedAndProject, a per-task k-row heap with no sampling
+      job.
+    - ``"bounded"``: the output is bounded by a small key domain at any
+      scale factor (status/flag/priority/nation/bucket/grouping-set/
+      decile keys, a fixed histogram width), never by corpus size. A
+      global ``orderBy`` is a range sort: a sampling job over the child
+      picks range bounds, then a range exchange feeds parallel sorts,
+      two jobs and an exchange to order a few hundred rows. One
+      single-target exchange feeding an in-task sort gives the same
+      total order with one fewer job and no sampling pass (measured
+      0.1-0.25 s per query at sf0.1 on a 6-row and a 7k-row output).
+    - ``"staged"``: a corpus-sized output over an expensive map-only
+      plan (pandas-UDF decode, interpreted higher-order functions,
+      UDTFs, window or block-join lineages). The range sampler of a
+      bare ``orderBy`` re-executes its whole child, measured 2x the
+      query. A hash repartition on the leading key materializes that
+      stage once (an AQE stage boundary), so the sampler reads shuffle
+      output. It is pinned to an explicit width so AQE's byte-based
+      coalescing cannot collapse the expensive map stage to one task:
+      the bytes are small exactly when per-row compute is the cost
+      (operators/shuffle.py).
+    - ``"sorted"``: every other corpus-sized output, a plain
+      ``orderBy``.
     """
-    return pinned_repartition(df, sort_cols[0]).orderBy(*sort_cols)
+    if not order:
+        return df
+    keys = [
+        F.col(k[: -len(" DESC")]).desc() if k.endswith(" DESC") else k
+        for k in order
+    ]
+    if limit is not None:
+        return df.orderBy(*keys).limit(limit)
+    if shape == "bounded":
+        return df.repartition(1).sortWithinPartitions(*keys)
+    if shape == "staged":
+        return pinned_repartition(df, order[0]).orderBy(*keys)
+    return df.orderBy(*keys)
 
 
+def query(
+    *order: str, shape: str = "sorted", limit: int | None = None
+) -> Callable[[QueryFn], QueryFn]:
+    """Declare a query: register ``build`` in ``QUERIES`` under its
+    name, finished by ``finish(build(...), order, shape, limit)``.
 
-def bounded_sort(df: DataFrame, *sort_cols: str | Column) -> DataFrame:
-    """Total-order a DOMAIN-BOUNDED query output — one bounded by a
-    small key domain at ANY scale factor (status/flag/priority/nation/
-    bucket/grouping-set/decile keys, or a fixed histogram width), never
-    by corpus size.
+    The decorated name is the finished query too, so a direct call
+    returns ordered output. The declaration is kept on the callable as
+    ``order``, ``shape`` and ``limit``. Keys stay strings until
+    ``finish`` runs: building a ``Column`` at import needs an active
+    Spark context."""
+    if shape not in SHAPES:
+        raise ValueError(f"unknown shape {shape!r}; expected one of {SHAPES}")
+    if limit is not None and shape != "sorted":
+        raise ValueError("a top-k query is sorted; it takes no shape")
 
-    A global ``orderBy`` is a range sort: the planner first runs a
-    SAMPLING job over the child stage to pick range bounds, then
-    range-exchanges into parallel sort tasks — two jobs plus an
-    exchange to order what is at most a few hundred rows. For a
-    domain-bounded output the right plan at every scale is ONE
-    single-target exchange feeding an in-task sort: same rows, same
-    total order, one fewer job and no sampling pass (measured
-    0.1-0.25 s per query at sf0.1 on both a 6-row and a 7k-row
-    output). Corpus-sized outputs keep ``orderBy``/``ordered_output``,
-    and top-k queries keep ``orderBy().limit()`` — Spark plans those
-    as TakeOrderedAndProject, which is already sampling-free.
-    Usage: ``.transform(bounded_sort, *keys)`` in place of the final
-    ``.orderBy(*keys)``."""
-    return df.repartition(1).sortWithinPartitions(*sort_cols)
+    def register(build: QueryFn) -> QueryFn:
+        @functools.wraps(build)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return finish(build(spark, sf_dir), order, shape, limit)
+
+        run.order, run.shape, run.limit = order, shape, limit
+        QUERIES[build.__name__] = run
+        return run
+
+    return register
 
 
 # --- TPC-H-style relational core ----------------------------------------
 
+@query("l_returnflag", "l_linestatus", shape="bounded")
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary (TPC-H Q1 shape): scan-heavy grouped aggregation.
 
@@ -159,10 +212,10 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dsum(drate("l_discount")) / F.count(F.lit(1)), 6).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .transform(bounded_sort, "l_returnflag", "l_linestatus")
     )
 
 
+@query("revenue DESC", "o_orderkey", limit=10)
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 unshipped orders by revenue (TPC-H Q3 shape).
 
@@ -190,11 +243,10 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
             F.col("o_orderpriority"),
         )
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(10)
     )
 
 
+@query("revenue DESC", "n_name", shape="bounded")
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue by nation where customer and supplier share the nation
     (TPC-H Q5 shape) — the flagship multi-join.
@@ -222,10 +274,10 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(revenue.cast("double").alias("revenue"))
-        .transform(bounded_sort, F.col("revenue").desc(), F.col("n_name"))
     )
 
 
+@query("revenue DESC", "c_custkey", limit=20)
 def q10_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 customers by returned-item revenue (TPC-H Q10 shape)."""
     cust = load_table(spark, sf_dir, "customer")
@@ -245,13 +297,12 @@ def q10_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_name",
             F.col("_rev").cast("double").alias("revenue"),
         )
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
-        .limit(20)
     )
 
 
 # --- join family ---------------------------------------------------------
 
+@query("c_custkey")
 def join_left_outer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-outer join preserving customers with zero orders (J1 shape:
     ``governance/main.py:52-58`` is the reference's left-join exemplar)."""
@@ -269,10 +320,10 @@ def join_left_outer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("order_count", F.lit(0)).alias("order_count"),
             F.coalesce(F.col("_spent").cast("double"), F.lit(0.0)).alias("total_spent"),
         )
-        .orderBy("c_custkey")
     )
 
 
+@query("c_custkey")
 def join_semi_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join: customers with at least one open ('O') order."""
     cust = load_table(spark, sf_dir, "customer")
@@ -281,18 +332,20 @@ def join_semi_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return semi_join(cust, open_orders, [("c_custkey", "o_custkey")]).select(
         "c_custkey", "c_name", "c_mktsegment"
-    ).orderBy("c_custkey")
+    )
 
 
+@query("c_custkey")
 def join_anti_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: customers that never placed an order."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     return anti_join(cust, orders, [("c_custkey", "o_custkey")]).select(
         "c_custkey", "c_name", "c_mktsegment"
-    ).orderBy("c_custkey")
+    )
 
 
+@query("s_suppkey")
 def join_broadcast_supplier_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dimension chain with explicit broadcast hints (supplier→nation→region)."""
     sup = load_table(spark, sf_dir, "supplier")
@@ -302,12 +355,12 @@ def join_broadcast_supplier_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         broadcast_dim_join(geo, region, [("n_regionkey", "r_regionkey")])
         .select("s_suppkey", "s_name", "n_name", "r_name")
-        .orderBy("s_suppkey")
     )
 
 
 # --- aggregation family --------------------------------------------------
 
+@query("o_orderpriority", shape="bounded")
 def agg_orders_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped sum/avg/min/max/count/count-distinct over orders."""
     orders = load_table(spark, sf_dir, "orders")
@@ -322,10 +375,10 @@ def agg_orders_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_totalprice").alias("max_total"),
             F.countDistinct("o_custkey").alias("n_customers"),
         )
-        .transform(bounded_sort, "o_orderpriority")
     )
 
 
+@query("status", "priority", shape="bounded")
 def agg_rollup_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (status, priority) — grouping-sets surface."""
     orders = load_table(spark, sf_dir, "orders")
@@ -341,10 +394,10 @@ def agg_rollup_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "sum_total",
         )
-        .transform(bounded_sort, "status", "priority")
     )
 
 
+@query("segment", "status", shape="bounded")
 def agg_cube_segment_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (mktsegment, orderstatus) — all 2² grouping sets in one
     pass (partial aggregation expands grouping ids map-side; one
@@ -364,10 +417,10 @@ def agg_cube_segment_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "sum_total",
         )
-        .transform(bounded_sort, "segment", "status")
     )
 
 
+@query("l_returnflag", shape="bounded")
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ approximate distinct counts (rows-only check: DuckDB's
     approx algorithm differs, so exact hash parity is not expected).
@@ -382,12 +435,12 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.approx_count_distinct("l_suppkey").alias("approx_supps"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        .transform(bounded_sort, "l_returnflag")
     )
 
 
 # --- window family -------------------------------------------------------
 
+@query("o_orderstatus", shape="bounded")
 def agg_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate percentiles (``percentile_approx``, accuracy 10⁴) per
     order status — the sketch twin of the exact ``agg_percentiles_orders``.
@@ -406,10 +459,10 @@ def agg_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("_p")[1], 2).alias("p90"),
             F.round(F.col("_p")[2], 2).alias("p99"),
         )
-        .transform(bounded_sort, "o_orderstatus")
     )
 
 
+@query("o_custkey", "rn")
 def window_topn_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer by price (ranking window)."""
     orders = load_table(spark, sf_dir, "orders")
@@ -421,10 +474,10 @@ def window_topn_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFra
             n=3,
         )
         .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-        .orderBy("o_custkey", "rn")
     )
 
 
+@query("user_id")
 def window_lag_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization of the events stream (30-minute gap),
     reduced to per-user session statistics.
@@ -442,10 +495,10 @@ def window_lag_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("session_id").alias("n_sessions"),
             F.count(F.lit(1)).alias("n_events"),
         )
-        .orderBy("user_id")
     )
 
 
+@query("o_custkey", "o_orderkey")
 def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer cumulative spend over order history (frame window).
 
@@ -473,12 +526,12 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             F.col("_running").cast("double").alias("running_spend"),
         )
-        .orderBy("o_custkey", "o_orderkey")
     )
 
 
 # --- sort / limit / set ops ---------------------------------------------
 
+@query("c_mktsegment", "quartile")
 def window_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions — ntile quartiles, percent_rank,
     cume_dist — over each customer segment's account balances, summarized
@@ -505,28 +558,26 @@ def window_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("c_acctbal"), 2).alias("min_bal"),
             F.round(F.max("c_acctbal"), 2).alias("max_bal"),
         )
-        .orderBy("c_mktsegment", "quartile")
     )
 
 
+@query("o_totalprice DESC", "o_orderkey", limit=10)
 def topk_expensive_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-10 by price — TakeOrderedAndProject, no full sort."""
     orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
+    return orders.select("o_orderkey", "o_custkey", "o_totalprice")
 
 
+@query("c_custkey")
 def set_union_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) of two filtered key sets."""
     cust = load_table(spark, sf_dir, "customer")
     a = cust.filter(F.col("c_mktsegment") == "AUTOMOBILE").select("c_custkey")
     b = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    return a.union(b).distinct().orderBy("c_custkey")
+    return a.union(b).distinct()
 
 
+@query("c_custkey")
 def set_except_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (distinct): customer keys minus keys that placed orders."""
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
@@ -535,9 +586,10 @@ def set_except_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # subtract == EXCEPT DISTINCT — one set-op instead of
     # exceptAll(...).distinct()
-    return cust.subtract(active).orderBy("c_custkey")
+    return cust.subtract(active)
 
 
+@query("c_custkey")
 def set_intersect_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct): customers that placed both an urgent-priority
     and a low-priority order."""
@@ -548,11 +600,12 @@ def set_intersect_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     low = orders.filter(F.col("o_orderpriority") == "5-LOW").select(
         F.col("o_custkey").alias("c_custkey")
     )
-    return urgent.intersect(low).orderBy("c_custkey")
+    return urgent.intersect(low)
 
 
 # --- scalar function families -------------------------------------------
 
+@query("lang_uc")
 def string_fns_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-function profile per language over documents."""
     docs = load_table(spark, sf_dir, "documents")
@@ -569,10 +622,10 @@ def string_fns_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("n_chars").alias("min_chars"),
             F.max("n_chars").alias("max_chars"),
         )
-        .orderBy("lang_uc")
     )
 
 
+@query("day", "event_type")
 def date_fns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """date_trunc daily aggregation over the events table."""
     ev = load_table(spark, sf_dir, "events")
@@ -585,10 +638,10 @@ def date_fns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(14,6)")).cast("double").alias("sum_value"),
         )
-        .orderBy("day", "event_type")
     )
 
 
+@query("window_start", "event_type")
 def tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling windows via ``F.window`` (batch twin of the
     Structured Streaming aggregation in ``streaming/``).
@@ -607,10 +660,10 @@ def tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_events",
         )
-        .orderBy("window_start", "event_type")
     )
 
 
+@query("user_id", "session_start")
 def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native gap-based session windows (``F.session_window``, 30-minute
     gap) per user — the batch twin of ``streaming/ops.sessionize_events``
@@ -648,7 +701,6 @@ def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "sum_value",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -659,6 +711,7 @@ EVENT_PROPS_JSON_SCHEMA = {
 }
 
 
+@query("event_type", shape="bounded")
 def json_fns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction with a Json2Spark-derived schema (composes X1 with
     the scalar-JSON surface: ``from_json(props, schema).k``)."""
@@ -674,10 +727,10 @@ def json_fns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("_k").cast("double") / F.count("_k"), 6).alias("avg_k"),
             F.max("_k").alias("max_k"),
         )
-        .transform(bounded_sort, "event_type")
     )
 
 
+@query("event_type", shape="bounded")
 def variant_fns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured VARIANT path (Spark 4): ``parse_json`` into the
     open VARIANT type, typed extraction with ``variant_get``, plus
@@ -700,10 +753,10 @@ def variant_fns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("_k").alias("max_k"),
             F.sum(F.col("_m").isNull().cast("long")).alias("n_missing"),
         )
-        .transform(bounded_sort, "event_type")
     )
 
 
+@query("event_id")
 def map_fns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map scalar functions (§2B array/map row, map half): JSON props
     parsed as ``map<string,bigint>``, then ``element_at`` / ``map_keys``
@@ -727,10 +780,10 @@ def map_fns_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "k_doubled"
             ),
         )
-        .orderBy("event_id")
     )
 
 
+@query("l_linestatus", shape="bounded")
 def math_fns_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math scalar functions over lineitem-derived quantities."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -748,10 +801,10 @@ def math_fns_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_high_disc"),
             F.round(F.abs(F.min("l_extendedprice")), 2).alias("abs_min_price"),
         )
-        .transform(bounded_sort, "l_linestatus")
     )
 
 
+@query("label")
 def array_fns_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array higher-order functions over the embeddings table: per-label
     count, mean first component, mean L2 norm."""
@@ -775,12 +828,12 @@ def array_fns_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("_first"), 6).alias("avg_first"),
             F.round(F.avg("_norm"), 6).alias("avg_norm"),
         )
-        .orderBy("label")
     )
 
 
 # --- LLM-pipeline: dedup ------------------------------------------------
 
+@query("doc_id")
 def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup over documents: keep lowest doc_id per distinct text
     (hash-partitioned on sha2(text), SURVEY.md §2B exact-dedup row)."""
@@ -788,10 +841,10 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         exact_dedup(docs, "text", order_by=[F.col("doc_id").asc()])
         .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
     )
 
 
+@query()
 def dedup_exact_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup statistics: total rows vs distinct texts vs duplicate rows."""
     docs = load_table(spark, sf_dir, "documents")
@@ -802,6 +855,7 @@ def dedup_exact_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("id_a", "id_b")
 def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-duplicate pairs (threshold 0.6) — the
     oracle-checkable twin of the MinHash/LSH path.
@@ -824,9 +878,10 @@ def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pairs.select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-    ).orderBy("id_a", "id_b")
+    )
 
 
+@query("doc_id")
 def neardup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs→clusters: exact-Jaccard near-dup pairs collapsed into
     duplicate clusters via large-star/small-star connected components
@@ -866,20 +921,19 @@ def neardup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.select("doc_id"), "doc_id", pairs, pre_canonical=True
         )
         .select("doc_id", "component", "cluster_size")
-        .orderBy("doc_id")
     )
 
 
+@query("id_a", "id_b")
 def neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate pairs (rows-only: xxhash64 has no DuckDB
     twin). Banding 16×4 over 64 hashes targets Jaccard ≳ 0.5."""
     docs = pinned_repartition(load_table(spark, sf_dir, "documents"), "doc_id")
     sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=64, shingle_size=3)
-    return lsh_candidate_pairs(sigs, "doc_id", bands=16, rows_per_band=4).orderBy(
-        "id_a", "id_b"
-    )
+    return lsh_candidate_pairs(sigs, "doc_id", bands=16, rows_per_band=4)
 
 
+@query("doc_id")
 def simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash per document (rows-only; xxhash64-based).
 
@@ -887,9 +941,10 @@ def simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than the per-bit higher-order ``F.aggregate`` column form —
     one hash per token, codegen'd votes, 64-long-wide shuffle."""
     docs = pinned_repartition(load_table(spark, sf_dir, "documents"), "doc_id")
-    return TX.simhash_signatures(docs, "doc_id", "text").orderBy("doc_id")
+    return TX.simhash_signatures(docs, "doc_id", "text")
 
 
+@query("doc_id", "pos", shape="staged")
 def fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style rolling-hash fingerprints, exploded to scalar
     ``(doc_id, pos, fp_hash)`` rows.
@@ -913,11 +968,12 @@ def fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos") + 1).cast("int").alias("pos"),
         "fp_hash",
     )
-    return ordered_output(exploded, "doc_id", "pos")
+    return exploded
 
 
 # --- LLM-pipeline: text analysis ----------------------------------------
 
+@query("doc_id", shape="staged")
 def text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality metrics (token count, BPE-ish token estimate,
     punctuation ratio, stopword ratio, composite score)."""
@@ -945,9 +1001,10 @@ def text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text", "en", toks=F.col("_toks"), ltoks=F.col("_ltoks")
         ).alias("quality"),
     )
-    return ordered_output(prof, "doc_id")
+    return prof
 
 
+@query("doc_id", shape="staged")
 def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language identification per document."""
     docs = pinned_repartition(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -959,18 +1016,16 @@ def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         TX.tokens(F.lower(F.col("text"))).alias("_ltoks"),
     )
-    return ordered_output(
-        staged.select(
-            "doc_id",
-            "lang",
-            TX.language_id("text", ltoks=F.col("_ltoks")).alias("lang_pred"),
-        ),
+    return staged.select(
         "doc_id",
+        "lang",
+        TX.language_id("text", ltoks=F.col("_ltoks")).alias("lang_pred"),
     )
 
 
 # --- LLM-pipeline: similarity search ------------------------------------
 
+@query("doc_id", "rank")
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 terms by TF-IDF — the corpus-statistics shape
     behind tokenizer training and keyword extraction.
@@ -1005,10 +1060,10 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
         .select("doc_id", "rank", "term", "tf", "df", "tfidf")
-        .orderBy("doc_id", "rank")
     )
 
 
+@query("n DESC", "bigram", limit=20)
 def ngram_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-20 bigrams (non-distinct shingles, lowercase) —
     the n-gram frequency table a tokenizer/boilerplate analysis starts
@@ -1024,11 +1079,10 @@ def ngram_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged.select(F.explode(grams).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("bigram").asc())
-        .limit(20)
     )
 
 
+@query("lang")
 def sample_hash_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash sampling (~1/8 of docs): sample membership is
     ``md5(doc_id) first hex digit ∈ {0,1}`` — the reproducible,
@@ -1048,7 +1102,6 @@ def sample_hash_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.when(sampled, 1).otherwise(0)) / F.count(F.lit(1)), 6
             ).alias("sample_rate"),
         )
-        .orderBy("lang")
     )
 
 
@@ -1058,6 +1111,7 @@ PII_EMAIL_RE = TX.PII_EMAIL_PATTERN
 PII_PHONE_RE = TX.PII_PHONE_PATTERN
 
 
+@query("doc_id")
 def pii_redact_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing — the compliance pass every training-data pipeline
     runs before text ships. The corpus is synthetic and PII-free, so the
@@ -1095,7 +1149,6 @@ def pii_redact_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("t").alias("len_before"),
             F.length(redacted).alias("len_after"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1108,6 +1161,7 @@ def pii_redact_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUZZY_MAX_BLOCK = 1000
 
 
+@query("id_a", "id_b", shape="staged")
 def fuzzy_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked edit-distance join — the entity-resolution shape: cheap
     blocking keys turn the quadratic all-pairs comparison into per-block
@@ -1264,12 +1318,10 @@ def fuzzy_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.levenshtein(F.col("px"), F.col("py"), 10).alias("distance"),
         ).where(F.col("distance") >= 0)
 
-    matched = score(fam_a).unionByName(score(extras))
-    # ordered_output, not bare orderBy: the range sampler would re-run
-    # the whole block join to pick partition bounds
-    return ordered_output(matched, "id_a", "id_b")
+    return score(fam_a).unionByName(score(extras))
 
 
+@query("doc_id")
 def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capstone composition — a Fineweb-style training-corpus
     pipeline as ONE declared plan: quality filter → exact dedup →
@@ -1311,30 +1363,27 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = scored.where(F.col("quality") >= 0.7)
     # The deduped subtree has TWO consumers in one execution: the
     # Jaccard/CC edge materialization (connected_components runs it
-    # eagerly) and the final representative projection. Un-persisted,
-    # the scan + quality scoring + dedup shuffle ran twice per query
-    # execution (~1.2 s of the 4.6 s at sf0.1); a lazy MEMORY_AND_DISK
-    # persist lets the CC materialization populate the cache and the
-    # output side read it (guide §5: reuse + expensive recompute).
-    # Recomputed from parquet on every execution — nothing survives
-    # across runs (the bench clearCache()s between passes).
-    from pyspark import StorageLevel
-
+    # eagerly) and the final representative projection. Uncached, the
+    # scan + quality scoring + dedup shuffle ran twice per query
+    # execution (~1.2 s of the 4.6 s at sf0.1). A lazy local checkpoint
+    # lets the first consumer's job write the blocks and the second
+    # read them. Unlike persist() it registers nothing in the session's
+    # CacheManager, so no later plan in the session can have this
+    # subtree substituted into it. Its blocks are freed when the
+    # DataFrame is garbage collected.
     deduped = exact_dedup(
         kept, "text", order_by=[F.col("doc_id").asc()]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     pairs = ngram_jaccard_pairs(
         deduped, "doc_id", "text", shingle_size=3, threshold=0.6, max_shingle_df=64
     )
     # pre_canonical: the Jaccard groupBy emits one row per (a < b) pair
     assigned = assign_components(deduped, "doc_id", pairs, pre_canonical=True)
     reps = assigned.where(F.col("doc_id") == F.col("component"))
-    return (
-        reps.select("doc_id", "lang", "n_tokens", "quality")
-        .orderBy("doc_id")
-    )
+    return reps.select("doc_id", "lang", "n_tokens", "quality")
 
 
+@query("query_id", "rn")
 def cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-5 for three query vectors taken from
     the table itself (vec_id 0,1,2): one broadcast-nested-loop pass over
@@ -1372,9 +1421,10 @@ def cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round("_c9", 6).alias("cosine"),
         "rn",
-    ).orderBy("query_id", "rn")
+    )
 
 
+@query("id_a", "id_b")
 def neardup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding-cosine near-duplicate pairs (threshold 0.4) via
     the blocked-GEMM all-pairs operator
@@ -1390,9 +1440,10 @@ def neardup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cosine_neardup_pairs(emb, threshold=0.4)  # n_blocks derived from parallelism (see operator)
     return pairs.select(
         "id_a", "id_b", F.round("cosine", 6).alias("cosine")
-    ).orderBy("id_a", "id_b")
+    )
 
 
+@query("col_name", shape="bounded")
 def profile_lineitem_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style numeric data profile of four lineitem measures in
     ONE scan (``operators/metrics.py::profile_numeric_columns``): a
@@ -1413,9 +1464,10 @@ def profile_lineitem_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return profile_numeric_columns(
         li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    ).transform(bounded_sort, "col_name")
+    )
 
 
+@query("vec_id")
 def semantic_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): embedding-
     cosine near-dup pairs collapsed into duplicate clusters, every
@@ -1451,7 +1503,6 @@ def semantic_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb.select("vec_id"), "vec_id", pairs, pre_canonical=True
         )
         .select("vec_id", "component", "cluster_size")
-        .orderBy("vec_id")
     )
 
 
@@ -1463,6 +1514,7 @@ def semantic_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMBEDDING_DIM = 64
 
 
+@query("cosine DESC", "vec_id")
 def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate nearest neighbours via sign-LSH bucketing (rows-only:
     the scale path trading recall for a 2^bits candidate reduction).
@@ -1502,10 +1554,10 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cosine_topk(in_bucket, query, k=10)
         .select("vec_id", F.round("cosine", 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
     )
 
 
+@query("cosine DESC", "vec_id")
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate nearest neighbours via an IVF index (rows-only):
     data-adaptive k-means coarse quantizer, cell-pruned exact search.
@@ -1531,10 +1583,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ivf_topk(cells, store.centroids, query, k=10, nprobe=4)
         .select("vec_id", F.round("cosine", 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
     )
 
 
+@query("cosine DESC", "vec_id")
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate nearest neighbours via product quantization
     (rows-only): the COMPRESSION member of the ANN family — LSH prunes
@@ -1570,12 +1622,12 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pq_topk_reranked(codes, emb, store.pq_codebooks, query, k=10)
         .select("vec_id", F.round("cosine", 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
     )
 
 
 # --- as-of join ----------------------------------------------------------
 
+@query("event_id")
 def asof_last_error_before_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASOF LEFT JOIN: for every click event, the latest error event of
     the same user at or before it (click-to-error attribution).
@@ -1626,9 +1678,10 @@ def asof_last_error_before_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.coalesce(F.col("err_event_id"), F.lit(-1)).alias("err_event_id"),
         F.coalesce(F.round("err_value", 6), F.lit(-1.0)).alias("err_value"),
-    ).orderBy("event_id")
+    )
 
 
+@query("event_id")
 def range_join_error_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded interval join: for every click, the count and max value of
     error events of the same user in the preceding 5 minutes.
@@ -1671,12 +1724,12 @@ def range_join_error_context(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("_n"), F.lit(0).cast("long")).alias("n_errors"),
             F.coalesce(F.col("_mx"), F.lit(-1.0)).alias("max_err_value"),
         )
-        .orderBy("event_id")
     )
 
 
 # --- LLM-pipeline: multimodal columns ------------------------------------
 
+@query("doc_id", shape="staged")
 def multimodal_decode_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal decode plumbing, oracle-checked end-to-end: documents →
     deterministic FAKM image blobs (pandas-UDF encode) → ``mapInPandas``
@@ -1724,9 +1777,10 @@ def multimodal_decode_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pixels"
         ),
     )
-    return ordered_output(prof, "doc_id")
+    return prof
 
 
+@query("doc_id", shape="staged")
 def multimodal_audio_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real-container multimodal round-trip, oracle-checked: documents →
     genuine PCM WAV blobs (``wav_encode``: RIFF header byte-compatible
@@ -1787,9 +1841,10 @@ def multimodal_audio_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("audio_meta.duration_ms"), F.lit(-1).cast("long")
         ).alias("duration_ms"),
     )
-    return ordered_output(prof, "doc_id")
+    return prof
 
 
+@query("doc_id")
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int16-PCM signal features, oracle-checked to the byte: documents
     → printable-ASCII sanitize (both engines agree byte==char after it)
@@ -1838,10 +1893,10 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("audio_features.zero_crossings").alias("zero_crossings"),
             F.col("audio_features.peak").alias("peak"),
         )
-        .orderBy("doc_id")
     )
 
 
+@query("doc_id", shape="staged")
 def multimodal_image_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second real-container multimodal round-trip, oracle-checked:
     documents → genuine PNG blobs (``png_encode``: stdlib zlib deflate,
@@ -1909,9 +1964,10 @@ def multimodal_image_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_bytes"
         ),
     )
-    return ordered_output(prof, "doc_id")
+    return prof
 
 
+@query("doc_id", shape="staged")
 def multimodal_video_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Third real-container multimodal round-trip, oracle-checked:
     documents → genuine AVI blobs (``avi_encode``: RIFF hdrl/movi/idx1,
@@ -1993,9 +2049,10 @@ def multimodal_video_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("video_profile.sampled_pixel_sum"), F.lit(-1).cast("long")
         ).alias("sampled_pixel_sum"),
     )
-    return ordered_output(prof, "doc_id")
+    return prof
 
 
+@query("o_orderstatus", shape="bounded")
 def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT: order counts, status rows × priority columns.
 
@@ -2017,9 +2074,10 @@ def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col(f"`{p}`"), F.lit(0).cast("long")).alias(a)
             for p, a in zip(prios, aliases)
         ],
-    ).transform(bounded_sort, "o_orderstatus")
+    )
 
 
+@query("l_linestatus", "metric", shape="bounded")
 def unpivot_lineitem_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT (melt): wide per-status sums → long (status, metric,
     value) rows — the inverse reshaping of pivot, via the native
@@ -2038,10 +2096,10 @@ def unpivot_lineitem_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             valueColumnName="value",
         )
         .select("l_linestatus", "metric", F.round("value", 2).alias("value"))
-        .transform(bounded_sort, "l_linestatus", "metric")
     )
 
 
+@query("o_orderstatus", shape="bounded")
 def agg_percentiles_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (median / p90) of order totals per
     status — ``F.percentile``, the sort-based exact form; DuckDB's
@@ -2057,10 +2115,10 @@ def agg_percentiles_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percentile(price, F.lit(0.9)), 6).alias("p90"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .transform(bounded_sort, "o_orderstatus")
     )
 
 
+@query("user_id")
 def agg_salted_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation over events (skew armor): identical
     result to a plain GROUP BY — which is exactly what the oracle
@@ -2088,11 +2146,12 @@ def agg_salted_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         F.round("sum_value", 6).alias("sum_value"),
         F.round("max_value", 6).alias("max_value"),
-    ).orderBy("user_id")
+    )
 
 
 # --- UDAF / UDTF surfaces -------------------------------------------------
 
+@query("o_orderstatus", shape="bounded")
 def udaf_geomean_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-agg pandas UDAF (vectorized Python aggregate): geometric
     mean of order totals per status. Oracle twin: EXP(AVG(LN(x))).
@@ -2111,10 +2170,10 @@ def udaf_geomean_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                 geometric_mean(F.col("o_totalprice").cast("double")), 4
             ).alias("geomean_price"),
         )
-        .transform(bounded_sort, "o_orderstatus")
     )
 
 
+@query("doc_id", "chunk_index", shape="staged")
 def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF via LATERAL join: documents exploded into overlapping
     32-token chunks with stride 24 — the context-window chunking stage
@@ -2125,18 +2184,18 @@ def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_udx(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs.createOrReplaceTempView("_udtf_chunk_src")
-    chunks = spark.sql(
+    return spark.sql(
         """
         SELECT doc_id, c.chunk_index, c.chunk_text, c.n_tokens
         FROM _udtf_chunk_src,
              LATERAL chunk_document(text, 32, 24) AS c
         """
     )
-    return ordered_output(chunks, "doc_id", "chunk_index")
 
 
 # --- sync: pure-Spark MERGE twin (X2/X3) ---------------------------------
 
+@query("o_orderkey")
 def sync_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE semantics as DataFrame algebra (``sync/merge.py``), staged
     deterministically from ``orders``: target = keys not divisible by 5;
@@ -2160,9 +2219,10 @@ def sync_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("upsert")
         .alias("update_type"),
     )
-    return merge_upsert(target, staging, keys=["o_orderkey"]).orderBy("o_orderkey")
+    return merge_upsert(target, staging, keys=["o_orderkey"])
 
 
+@query("supp_nation", "cust_nation", "l_year", shape="bounded")
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bilateral trade volume between two nations by
     ship year. Five-way join where every dimension (supplier, customer,
@@ -2204,10 +2264,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(dsum(F.col("_vol")).alias("revenue"))
-        .transform(bounded_sort, "supp_nation", "cust_nation", "l_year")
     )
 
 
+@query("o_year", shape="bounded")
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of PROMO-part revenue sold
     into a region, by order year. Seven-way star join — part, supplier,
@@ -2253,10 +2313,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("mkt_share")
         )
-        .transform(bounded_sort, "o_year")
     )
 
 
+@query("o_totalprice DESC", "o_orderdate", "o_orderkey", limit=100)
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: orders whose total line quantity exceeds a
     threshold (IN + grouped HAVING subquery), with customer attribution.
@@ -2285,13 +2345,10 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("o_totalprice", 2).alias("o_totalprice"),
             F.round("total_qty", 2).alias("total_qty"),
         )
-        .orderBy(
-            F.col("o_totalprice").desc(), F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
-        )
-        .limit(100)
     )
 
 
+@query("custkey")
 def join_full_outer_spend_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join — the one join type not yet declared: high-spend
     customers vs frequent buyers, with both-sided, left-only and
@@ -2317,10 +2374,10 @@ def join_full_outer_spend_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("total_spend", F.lit(-1.0)).alias("total_spend"),
             F.coalesce("n_orders", F.lit(-1).cast("long")).alias("n_orders"),
         )
-        .orderBy("custkey")
     )
 
 
+@query("c_mktsegment", shape="bounded")
 def join_salted_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-proof fact⋈dim join via ``operators/joins.py::salted_join``:
     events (the skewable fact — one hot user at 100 TB funnels a plain
@@ -2339,10 +2396,10 @@ def join_salted_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("sum_value"),
         )
-        .transform(bounded_sort, "c_mktsegment")
     )
 
 
+@query("n_rows DESC", "user_id", limit=20)
 def skew_profile_event_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostic — the measurement that picks a join
     strategy (plain shuffle, broadcast, or salted —
@@ -2376,11 +2433,10 @@ def skew_profile_event_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("skew_x"),
         )
-        .orderBy(F.col("n_rows").desc(), F.col("user_id"))
-        .limit(20)
     )
 
 
+@query("vec_id")
 def embedding_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization of the embedding column — the
     compression step before an ANN index ships to serving. Pure
@@ -2439,11 +2495,12 @@ def embedding_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(invalid, None).otherwise(F.col("_st.l1")).alias("q_l1"),
         F.when(invalid, None).otherwise(F.col("_st.mx")).alias("q_max"),
     )
-    return out.orderBy("vec_id")
+    return out
 
 
 # --- correlated-subquery / complex-predicate relational shapes ----------
 
+@query("o_orderpriority", shape="bounded")
 def exists_late_shipment_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS correlated subquery (TPC-H Q4 shape): orders of 1996 with
     at least one line item shipped more than 60 days after the order
@@ -2468,10 +2525,10 @@ def exists_late_shipment_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         late.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_orders"))
-        .transform(bounded_sort, "o_orderpriority")
     )
 
 
+@query()
 def scalar_subquery_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery (TPC-H Q17 shape): revenue impact of
     small-quantity lineitems, threshold = half the per-part average.
@@ -2502,6 +2559,7 @@ def scalar_subquery_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query()
 def filter_or_of_and_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Disjunction-of-conjunctions predicate (TPC-H Q19 shape): revenue
     from three (brand, size-range, quantity-range) bands.
@@ -2531,6 +2589,7 @@ def filter_or_of_and_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(dsum(rev).alias("revenue"))
 
 
+@query("c_mktsegment", shape="bounded")
 def notexists_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS + uncorrelated scalar subquery (TPC-H Q22 shape):
     above-average-balance customers with no order since 2000, by
@@ -2559,10 +2618,10 @@ def notexists_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_cust"),
             dsum(dmoney("c_acctbal")).alias("total_bal"),
         )
-        .transform(bounded_sort, "c_mktsegment")
     )
 
 
+@query()
 def conditional_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation ratio (TPC-H Q14 shape): share of Q1-1997
     revenue from PROMO parts, as one scan + one broadcast join — the
@@ -2580,6 +2639,7 @@ def conditional_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("status", "priority", shape="bounded")
 def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — ((status, priority), (priority), ()) is
     neither a rollup nor a cube, exercising the arbitrary-sets API
@@ -2603,10 +2663,10 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "sum_total",
         )
-        .transform(bounded_sort, "status", "priority")
     )
 
 
+@query()
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecast-revenue delta (TPC-H Q6 shape): pure scan-side predicate
     aggregation — the canonical pushdown showcase.
@@ -2627,6 +2687,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("custdist DESC", "c_count DESC", shape="bounded")
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer order-count histogram (TPC-H Q13 shape): left outer join
     with a build-side-only filter, then a two-level aggregation (count
@@ -2651,10 +2712,10 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .transform(bounded_sort, F.col("custdist").desc(), F.col("c_count").desc())
     )
 
 
+@query("s_suppkey")
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top supplier by quarterly revenue (TPC-H Q15 shape): aggregate
     "view" joined against its own MAX — the scalar-subquery-over-a-view
@@ -2687,10 +2748,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             F.col("_rev").cast("double").alias("total_revenue"),
         )
-        .orderBy("s_suppkey")
     )
 
 
+@query("p_partkey", "s_suppkey")
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimum-cost supplier per part (TPC-H Q2 shape, adapted: the
     testdata has no partsupp table, so lineitem serves as the
@@ -2732,10 +2793,10 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_min_cost").cast("double").alias("min_cost"),
         )
         .distinct()
-        .orderBy("p_partkey", "s_suppkey")
     )
 
 
+@query("part_value DESC", "l_partkey")
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-concentration scan (TPC-H Q11 shape, adapted to the
     lineitem link): per-part inventory value for suppliers of a nation
@@ -2770,10 +2831,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             > F.col("_total").cast("double") * 0.001
         )
         .select("l_partkey", F.col("_value").cast("double").alias("part_value"))
-        .orderBy(F.col("part_value").desc(), F.col("l_partkey"))
     )
 
 
+@query("numwait DESC", "s_suppkey", limit=100)
 def q21_single_blame_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suppliers solely responsible for an order's returns (TPC-H Q21
     shape, adapted: no receipt/commit dates in the testdata, so
@@ -2815,11 +2876,10 @@ def q21_single_blame_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         blamed.join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_suppkey", "s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.col("numwait").desc(), F.col("s_suppkey"))
-        .limit(100)
     )
 
 
+@query("n_name", "o_year DESC", shape="bounded")
 def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Profit by nation and order year for a part-name family (TPC-H Q9
     shape, adapted: the testdata has no partsupp, so cost is
@@ -2853,10 +2913,10 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("int").alias("o_year"),
         )
         .agg((revenue.cast("double") - cost.cast("double")).alias("profit"))
-        .transform(bounded_sort, "n_name", F.col("o_year").desc())
     )
 
 
+@query("l_linestatus", shape="bounded")
 def q12_late_lines_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority mix of late 1997 shipments by line status (TPC-H Q12
     shape, adapted: no l_shipmode column, so l_linestatus is the
@@ -2883,10 +2943,10 @@ def q12_late_lines_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(high, 0).otherwise(1)).alias("low_line_count"),
         )
-        .transform(bounded_sort, "l_linestatus")
     )
 
 
+@query("supplier_cnt DESC", "p_brand", "p_size", shape="bounded")
 def q16_supplier_count_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-supplier counts per part brand/size outside an excluded
     supplier set (TPC-H Q16 shape, adapted: supplier relationships come
@@ -2926,10 +2986,10 @@ def q16_supplier_count_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .transform(bounded_sort, F.col("supplier_cnt").desc(), F.col("p_brand"), F.col("p_size"))
     )
 
 
+@query("s_suppkey")
 def q20_heavy_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suppliers that moved significantly more of a part-name family in
     1997 than the average supplier did (TPC-H Q20 shape, adapted: no
@@ -2965,12 +3025,12 @@ def q20_heavy_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         sup.join(F.broadcast(heavy), F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
-        .orderBy("s_suppkey")
     )
 
 
 # --- LLM-pipeline additions: contamination / packing / mixture ----------
 
+@query("doc_id")
 def contamination_ngram_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination screen: flag training documents sharing
     word-3-gram shingles with a held-out eval set (here: ``doc_id % 97
@@ -3021,10 +3081,10 @@ def contamination_ngram_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hit_ratio",
             F.round(F.col("n_hits") / F.col("n_shingles"), 6),
         )
-        .orderBy("doc_id")
     )
 
 
+@query("doc_id")
 def pack_sequences_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-sequence packing layout: concatenate each shard's token
     stream in doc_id order and chunk it into fixed 2048-token training
@@ -3066,10 +3126,10 @@ def pack_sequences_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + 1
             ).cast("bigint").alias("n_seqs_spanned"),
         )
-        .orderBy("doc_id")
     )
 
 
+@query("lang", shape="bounded")
 def mixture_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based corpus mixing (multilingual-pretraining shape):
     per-language keep rates ∝ count^α relative to the largest language
@@ -3108,10 +3168,10 @@ def mixture_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "achieved_rate", F.round(F.col("n_kept") / F.col("n_total"), 6)
         )
-        .transform(bounded_sort, "lang")
     )
 
 
+@query("doc_id")
 def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-model quality proxy (the CCNet/KenLM-filter shape with
     the corpus itself as the LM): per-document mean unigram
@@ -3154,9 +3214,10 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_tokens",
         F.round("_alp", 6).alias("avg_logprob"),
-    ).orderBy("doc_id")
+    )
 
 
+@query("l_returnflag", shape="bounded")
 def robust_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust dispersion statistics: per-group median and MAD (median
     absolute deviation) — the outlier-resistant pair used for anomaly
@@ -3182,10 +3243,10 @@ def robust_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.median(F.abs(F.col("q") - F.col("_med"))), 6
             ).alias("mad_qty"),
         )
-        .transform(bounded_sort, "l_returnflag")
     )
 
 
+@query("doc_id", shape="staged")
 def repetition_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repetition quality metrics (the Gopher/FineWeb filter family):
     distinct-token ratio and the most-frequent-bigram mass per document
@@ -3217,7 +3278,7 @@ def repetition_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_bigram = base.groupBy("doc_id", "n_tokens", "n_distinct", "bg").agg(
         F.count(F.lit(1)).alias("_c")
     )
-    return _repetition_ordered(
+    return (
         per_bigram.groupBy("doc_id", "n_tokens", "n_distinct")
         .agg(
             F.max("_c").alias("top_bigram_count"),
@@ -3237,12 +3298,7 @@ def repetition_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _repetition_ordered(df: DataFrame) -> DataFrame:
-    # ordered_output: a bare orderBy's range sampler re-runs the
-    # two-level bigram aggregation to pick partition bounds
-    return ordered_output(df, "doc_id")
-
-
+@query("o_custkey", "order_date", "o_orderkey")
 def window_range_7day_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame window (value-based, not row-based): each order's
     trailing-7-day customer spend — the moving-window-by-time shape
@@ -3271,16 +3327,10 @@ def window_range_7day_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"),
             F.sum("_price").over(w).cast("double").alias("spend_7d"),
         )
-        # order_date is NULL when o_orderdate is (the type-variant fuzz
-        # plants exactly that); NULL placement differs across engines
-        # (Spark ASC = NULLS FIRST, DuckDB = NULLS LAST) so pin it
-        # explicitly on BOTH sides for a stable driver-side hash.
-        .orderBy(
-            "o_custkey", F.col("order_date").asc_nulls_first(), "o_orderkey"
-        )
     )
 
 
+@query("seg_label", shape="bounded")
 def nullsafe_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equi-join (``<=>`` / IS NOT DISTINCT FROM): customers
     whose segment is masked to NULL (the 'unknown' bucket) must STILL
@@ -3307,10 +3357,10 @@ def nullsafe_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(F.broadcast(dim), F.col("seg").eqNullSafe(F.col("d_seg")))
         .groupBy("seg_label")
         .agg(F.count(F.lit(1)).alias("n_customers"))
-        .transform(bounded_sort, "seg_label")
     )
 
 
+@query("l_returnflag", shape="bounded")
 def stats_regression_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregate family: per return-flag correlation,
     sample covariance, least-squares slope/intercept/R², and exact
@@ -3366,10 +3416,10 @@ def stats_regression_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             "median_price",
             "stddev_qty",
         )
-        .transform(bounded_sort, "l_returnflag")
     )
 
 
+@query("event_type", shape="bounded")
 def sketch_rollup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable-sketch rollup (Spark 4 DataSketches HLL): per-event-type
     user sketches, PLUS an ALL row computed by ``hll_union_agg`` over
@@ -3395,9 +3445,10 @@ def sketch_rollup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_estimate("u").cast("bigint").alias("est_users"),
         )
     )
-    return per.unionByName(total).transform(bounded_sort, "event_type")
+    return per.unionByName(total)
 
 
+@query("l_returnflag", shape="bounded")
 def kll_quantile_rollup_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable-quantile rollup (Spark 4 DataSketches KLL): per
     return-flag KLL sketches of the extended price, read out as
@@ -3437,9 +3488,10 @@ def kll_quantile_rollup_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("ALL"),
         "_m",
     )
-    return per.unionByName(total).transform(bounded_sort, "l_returnflag")
+    return per.unionByName(total)
 
 
+@query()
 def theta_cohort_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort set-algebra via Theta sketches (Spark 4 DataSketches):
     distinct-user intersection / union / difference between two
@@ -3485,6 +3537,7 @@ def theta_cohort_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query()
 def funnel_conversion_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Funnel analysis: view → click → purchase, each stage's first
     event strictly after the previous stage's — the product-analytics
@@ -3549,6 +3602,7 @@ def funnel_conversion_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("cohort_week", "week_offset", shape="bounded")
 def cohort_retention_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention: users grouped by first-activity week, counted
     as retained in each later week they were active — the triangle
@@ -3574,10 +3628,10 @@ def cohort_retention_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("week") - F.col("cohort_week")).alias("week_offset"),
         )
         .agg(F.countDistinct("user_id").alias("n_active"))
-        .transform(bounded_sort, "cohort_week", "week_offset")
     )
 
 
+@query("user_id", "hour", shape="staged")
 def resample_ffill_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series resample + gap fill: each user's event stream becomes
     a dense hourly grid over their own active span (per-user
@@ -3677,10 +3731,10 @@ def resample_ffill_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ~F.col("observed")
         ).alias("is_gap"),
     )
-    # ordered_output: the range sampler would re-run the window
-    return ordered_output(filled, "user_id", "hour")
+    return filled
 
 
+@query("s_suppkey")
 def spatial_box_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial proximity join (grid-bucketed box join,
     ``operators/joins.py::grid_box_join``): suppliers and customers get
@@ -3717,10 +3771,10 @@ def spatial_box_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_nearby"),
             F.min("nb_c_custkey").alias("nearest_custkey_min"),
         )
-        .orderBy("s_suppkey")
     )
 
 
+@query("o_year", "o_quarter")
 def date_arith_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-arithmetic function family over orders: month shifting
     with end-of-month clamping (``add_months``), ``last_day``, quarter /
@@ -3751,10 +3805,10 @@ def date_arith_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .withColumn("avg_days_to_close", F.round("avg_days_to_close", 6))
-        .orderBy("o_year", "o_quarter")
     )
 
 
+@query("node")
 def recursive_cte_customer_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4 ``WITH RECURSIVE``): traverse the implicit
     customer hierarchy ``parent(k) = floor(k / 10)`` from the sub-10
@@ -3785,11 +3839,11 @@ def recursive_cte_customer_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT node, root, CAST(depth AS INT) AS depth
         FROM tree
-        ORDER BY node
         """
     )
 
 
+@query("vec_id", shape="staged")
 def raster_contours_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster→contours end-to-end (reference U3, GDAL-free engine):
     embeddings reshaped into 8×8 DEM tiles (per-vector min-max scaled to
@@ -3886,11 +3940,10 @@ def raster_contours_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("cwkb").isNotNull(), n_lines).alias("n_polylines"),
         F.length("cwkb").alias("n_wkb_bytes"),
     )
-    # ordered_output, not bare orderBy: the range sampler would re-run
-    # the whole two-UDF contour lineage to pick partition bounds
-    return ordered_output(profiled, "vec_id")
+    return profiled
 
 
+@query("doc_id", shape="staged")
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring span dedup profile (Lee et al. 2022 ExactSubstr
     shape): per document, the maximal 8-token-or-longer passages shared
@@ -3912,9 +3965,10 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("span_tokens").cast("long").alias("dup_tokens"),
         F.max("span_tokens").cast("long").alias("max_span_tokens"),
     )
-    return ordered_output(prof, "doc_id")
+    return prof
 
 
+@query("score_bin DESC", shape="bounded")
 def quality_ensemble_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ensemble quality scoring + token-budget selection (the DCLM /
     FineWeb shape): blend the heuristic quality score with the
@@ -3997,10 +4051,10 @@ def quality_ensemble_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             "selected", F.col("cum_tokens") <= 0.5 * F.col("_total_tokens")
         )
         .drop("_total_tokens")
-        .transform(bounded_sort, F.col("score_bin").desc())
     )
 
 
+@query("source")
 def dedup_cross_batch_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-batch novelty screen, declared form of the dedup history
     store (``sources/dedup_store.py``): docs with ``doc_id % 3 == 0``
@@ -4041,10 +4095,10 @@ def dedup_cross_batch_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_novel"),
             F.min("doc_id").alias("first_novel_id"),
         )
-        .orderBy("source")
     )
 
 
+@query("source")
 def neardup_crossbatch_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-batch NEAR-duplicate novelty (rows-only; the declared form
     of ``sources/dedup_store.py::neardup_against_history``): documents
@@ -4081,18 +4135,17 @@ def neardup_crossbatch_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
     # bb has THREE consumers in this one plan (history, seen, intra);
-    # un-persisted, the whole tokenize→shingle→64-min-agg signature
-    # pipeline executed three times per run. The persisted rows are
+    # uncached, the whole tokenize→shingle→64-min-agg signature
+    # pipeline executed three times per run. The checkpointed rows are
     # (doc_id, band, bucket) — ~24 B/doc·band, far smaller than the
-    # corpus — and are recomputed from parquet on every execution.
-    from pyspark import StorageLevel
-
+    # corpus. A lazy local checkpoint, not persist(): it leaves no
+    # CacheManager entry behind (see pipeline_training_corpus).
     bb = (
         lsh_band_buckets(
             minhash_signatures(docs, "doc_id", "text"), "doc_id"
         )
         .select("doc_id", "bucket")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     history = (
         bb.join(
@@ -4120,10 +4173,10 @@ def neardup_crossbatch_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_novel"),
             F.min("doc_id").alias("first_novel_id"),
         )
-        .orderBy("source")
     )
 
 
+@query("keep_id")
 def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-exact dedup on a canonical HEAD fingerprint: the first 80
     characters lowercased, punctuation-stripped, whitespace-collapsed
@@ -4154,12 +4207,10 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_docs") > 1)
     )
-    return (
-        groups.select("keep_id", "n_docs")
-        .orderBy("keep_id")
-    )
+    return groups.select("keep_id", "n_docs")
 
 
+@query("o_orderstatus", shape="bounded")
 def agg_listagg_mode_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-set aggregates over orders (§2B agg surface, Spark 4):
     ``listagg(DISTINCT …) WITHIN GROUP (ORDER BY …)`` — the ANSI
@@ -4183,10 +4234,10 @@ def agg_listagg_mode_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.mode("o_orderpriority", True).alias("top_priority"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .transform(bounded_sort, "o_orderstatus")
     )
 
 
+@query("c_custkey", "rnk")
 def lateral_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL LATERAL correlated subquery (§2B subquery surface): each
     high-balance customer joined laterally to its own top-2 orders by
@@ -4219,13 +4270,13 @@ def lateral_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
           ORDER BY CAST(o_totalprice AS DOUBLE) DESC, o_orderkey
           LIMIT 2
         ) t
-        ORDER BY c.c_custkey, t.rnk
         """,
         lat_customer=load_table(spark, sf_dir, "customer"),
         lat_orders=load_table(spark, sf_dir, "orders"),
     )
 
 
+@query("user_id")
 def interval_coalesce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval coalescing (gaps-and-islands over explicit interval
     ENDS, §2B window/sessionize surface): each event spans
@@ -4286,10 +4337,10 @@ def interval_coalesce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("i_end") - F.col("i_start")).alias("covered_us"),
             F.max("i_events").alias("max_island_events"),
         )
-        .orderBy(F.col("user_id").asc_nulls_first())
     )
 
 
+@query("user_id")
 def twap_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average value per user (§2B window surface), the
     step-function integral every metering/pricing pipeline computes:
@@ -4331,10 +4382,10 @@ def twap_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "weighted_cents_us"
             ),
         )
-        .orderBy(F.col("user_id").asc_nulls_first())
     )
 
 
+@query("user_id", "event_type")
 def scd2_event_type_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run-length compression of each user's event_type stream — the
     SCD-2 collapse (consecutive equal values become one validity run,
@@ -4374,13 +4425,10 @@ def scd2_event_type_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("run_len").alias("max_run_len"),
             F.sum("run_len").alias("total_events"),
         )
-        .orderBy(
-            F.col("user_id").asc_nulls_first(),
-            F.col("event_type").asc_nulls_first(),
-        )
     )
 
 
+@query("bin", shape="bounded")
 def histogram_orders_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram over order value (§2B agg surface): $500
     bins on exact integer cents — the profiling primitive every data
@@ -4406,12 +4454,10 @@ def histogram_orders_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("cents").alias("max_cents"),
             F.sum("cents").alias("sum_cents"),
         )
-        # a NULL price has no bin: the NULL-bin group's sort position is
-        # pinned (Spark ASC defaults NULLS FIRST, DuckDB NULLS LAST)
-        .transform(bounded_sort, F.col("bin").asc_nulls_first())
     )
 
 
+@query("prev_type", "cur_type", shape="bounded")
 def markov_transitions_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition counts over per-user event-type
     sequences (§2B window surface): LAG pairs (prev → cur) per user
@@ -4443,13 +4489,10 @@ def markov_transitions_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_transitions"),
             F.countDistinct("user_id").alias("n_users"),
         )
-        .transform(bounded_sort, 
-            F.col("prev_type").asc_nulls_first(),
-            F.col("cur_type").asc_nulls_first(),
-        )
     )
 
 
+@query("o_orderpriority", "rnk", "o_orderkey")
 def rank_ties_topn_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per priority with RANK — ties KEPT (§2B ranking
     surface beside the row_number top-n twin): a rank-k cut must admit
@@ -4467,10 +4510,10 @@ def rank_ties_topn_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderpriority", "o_orderkey", cents.alias("cents"))
         .withColumn("rnk", F.rank().over(w))
         .where(F.col("rnk") <= 3)
-        .orderBy("o_orderpriority", "rnk", "o_orderkey")
     )
 
 
+@query("digit", shape="bounded")
 def benford_first_digit_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-significant-digit profile of order values (§2B
     string/math surface; a standard fraud/data-quality screen). The
@@ -4499,10 +4542,10 @@ def benford_first_digit_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("cents").alias("min_cents"),
             F.max("cents").alias("max_cents"),
         )
-        .transform(bounded_sort, "digit")
     )
 
 
+@query("source", "rn")
 def domain_quota_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document quota (LLM curation surface): keep at most 3
     documents per source, preferring longer ones — the per-domain cap
@@ -4525,10 +4568,10 @@ def domain_quota_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "doc_id", "n_chars")
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 3)
-        .orderBy(F.col("source").asc_nulls_first(), "rn")
     )
 
 
+@query("user_id")
 def cdc_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC snapshot compaction (§2B upsert surface, the read side of
     MERGE): latest event per user — row_number DESC = 1 over the change
@@ -4557,10 +4600,10 @@ def cdc_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.unix_micros("ts").alias("last_ts_us"),
         )
-        .orderBy(F.col("user_id").asc_nulls_first())
     )
 
 
+@query("o_custkey", "o_orderkey")
 def qualify_running_budget_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUALIFY-style window filter (the front door of keep-first /
     budget-cut selection): per customer, orders in date order are kept
@@ -4584,10 +4627,10 @@ def qualify_running_budget_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cum_cents", F.sum("cents").over(w))
         .where(F.col("cum_cents") <= 30_000_000)
         .select("o_custkey", "o_orderkey", "cents", "cum_cents")
-        .orderBy(F.col("o_custkey").asc_nulls_first(), "o_orderkey")
     )
 
 
+@query("gid", "o_orderstatus", "o_orderpriority", shape="bounded")
 def grouping_id_sales_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS with the grouping id SURFACED (§2B grouping
     surface beside the coalesce-to-'ALL' twin): ((status), (priority),
@@ -4610,14 +4653,10 @@ def grouping_id_sales_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(dmoney("o_totalprice")).alias("sum_total"),
         )
         .select("gid", "o_orderstatus", "o_orderpriority", "n_orders", "sum_total")
-        .transform(bounded_sort, 
-            "gid",
-            F.col("o_orderstatus").asc_nulls_first(),
-            F.col("o_orderpriority").asc_nulls_first(),
-        )
     )
 
 
+@query("vec_id")
 def array_topk_quantized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array higher-order-function chain over embeddings (§2B array
     surface): floor-quantize each component to exact integer
@@ -4663,10 +4702,10 @@ def array_topk_quantized_embeddings(spark: SparkSession, sf_dir: str) -> DataFra
             F.try_element_at("_t", F.lit(1)).alias("top1"),
             F.try_element_at("_t", F.lit(8)).alias("top8"),
         )
-        .orderBy("vec_id")
     )
 
 
+@query("user_id", "event_type")
 def map_zip_with_merge_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-merge via ``map_zip_with`` (§2B map surface, the merge half):
     per-user event-type count maps built independently over two ingest
@@ -4745,10 +4784,10 @@ def map_zip_with_merge_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("late_n"),
             "total_n",
         )
-        .orderBy(F.col("user_id").asc_nulls_first(), "event_type")
     )
 
 
+@query("origin", shape="bounded")
 def union_byname_backfill_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source ingest via ``unionByName(allowMissingColumns=True)``
     (§2B multi-source surface): the documents table unioned with a
@@ -4787,10 +4826,10 @@ def union_byname_backfill_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("n_chars").isNull(), 1)).alias("n_backfilled"),
             F.sum("_chars_filled").alias("sum_chars_filled"),
         )
-        .transform(bounded_sort, "origin")
     )
 
 
+@query("o_orderpriority", shape="bounded")
 def argminmax_orders_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``max_by``/``min_by`` (SQL ``arg_max``/``arg_min``) per priority:
     the orderkey of the LATEST order and of the CHEAPEST order — the
@@ -4827,10 +4866,10 @@ def argminmax_orders_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("o_orderkey", latest_key).alias("latest_orderkey"),
             F.min_by("o_orderkey", cheap_key).alias("cheapest_orderkey"),
         )
-        .transform(bounded_sort, "o_orderpriority")
     )
 
 
+@query("n_active_hours", shape="bounded")
 def bitmap_hour_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise-aggregate activity bitmap (§2B math/agg surface): each
     user's active hours-of-day OR-folded into one bigint
@@ -4863,10 +4902,10 @@ def bitmap_hour_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("hour_mask").alias("min_mask"),
             F.max("hour_mask").alias("max_mask"),
         )
-        .transform(bounded_sort, "n_active_hours")
     )
 
 
+@query("event_type")
 def try_cast_typed_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Messy-ingest typed backfill via ``try_cast`` (SQL ``TRY_CAST``):
     extract a JSON field as STRING, cast it NULL-on-error, and profile
@@ -4896,10 +4935,10 @@ def try_cast_typed_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_cast_bad"),
             F.sum("_k").alias("sum_k"),
         )
-        .orderBy("event_type")
     )
 
 
+@query("o_custkey")
 def date_spine_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-densify then find the holes: per customer active in
     1995 (>= 2 distinct order dates), the count and bounds of calendar
@@ -4961,10 +5000,10 @@ def date_spine_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("d").alias("first_gap"),
             F.max("d").alias("last_gap"),
         )
-        .orderBy("o_custkey")
     )
 
 
+@query("c_mktsegment", shape="bounded")
 def bool_flags_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean aggregates per market segment: ``bool_and``/``bool_or``
     over a balance predicate plus ``count_if`` — the SQL:2023 trio both
@@ -4984,10 +5023,10 @@ def bool_flags_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.bool_or(F.col("c_acctbal") < 0).alias("any_negative"),
             F.count_if(F.col("c_acctbal") > 5000).alias("n_wealthy"),
         )
-        .transform(bounded_sort, "c_mktsegment")
     )
 
 
+@query("kind")
 def inline_order_charges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``F.inline`` — the struct-array generator (§2B array surface,
     UNNEST-of-structs twin): each order expands into typed charge rows
@@ -5023,10 +5062,10 @@ def inline_order_charges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").alias("sum_cents"),
             F.max("cents").alias("max_cents"),
         )
-        .orderBy("kind")
     )
 
 
+@query("user_id")
 def window_first_last_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``first``/``last`` with IGNORE NULLS over the full user timeline
     (§2B analytic-window surface): the first non-NULL value and last
@@ -5064,10 +5103,10 @@ def window_first_last_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFram
             F.first("_lt").alias("last_type_seen"),
             F.first("_n").alias("n_events"),
         )
-        .orderBy("user_id")
     )
 
 
+@query("doc_id")
 def set_algebra_token_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array set algebra (§2B array surface, the set-op half):
     ``array_intersect`` / ``array_except`` / ``array_union`` over each
@@ -5107,10 +5146,10 @@ def set_algebra_token_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_union("_a", "_b")).alias("n_union"),
         )
         .filter(F.col("n_union") > 0)
-        .orderBy("doc_id")
     )
 
 
+@query("t_key", shape="bounded")
 def str_to_map_event_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``str_to_map`` front door (§2B map surface, the parse half): a
     key=value;key=value wire string — the flat config/tag format every
@@ -5155,10 +5194,10 @@ def str_to_map_event_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("_u").alias("min_user"),
             F.max("_u").alias("max_user"),
         )
-        .transform(bounded_sort, "t_key")
     )
 
 
+@query("o_orderpriority")
 def percentile_disc_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``percentile_disc`` beside the existing ``_cont`` queries (§2B
     percentile surface): the DISCRETE quantile — first actual data
@@ -5187,11 +5226,11 @@ def percentile_disc_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS p90
         FROM _orders_pdisc
         GROUP BY o_orderpriority
-        ORDER BY o_orderpriority NULLS FIRST
         """
     )
 
 
+@query("word")
 def regexp_extract_all_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``regexp_extract_all`` + explode (§2B string surface, the
     all-matches half): every 4+-letter lowercase word pulled from each
@@ -5223,10 +5262,10 @@ def regexp_extract_all_words(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("doc_id").alias("n_docs"),
         )
         .filter(F.col("n") >= 5)
-        .orderBy("word")
     )
 
 
+@query("user_id", "k")
 def map_filter_concat_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``map_filter`` + ``map_concat`` front doors beside the existing
     ``map_zip_with`` merge (§2B map surface): each user's event-type
@@ -5268,10 +5307,11 @@ def map_filter_concat_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         enriched.select(
             "user_id", F.explode("m2").alias("k", "v")
-        ).orderBy(F.col("user_id").asc_nulls_first(), "k")
+        )
     )
 
 
+@query("bucket", shape="bounded")
 def width_bucket_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``width_bucket`` equi-width histogram (§2B math surface) beside
     the hand-binned ``histogram_orders_prices``: prices bucketed into
@@ -5301,10 +5341,10 @@ def width_bucket_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("_cents").alias("min_cents"),
             F.max("_cents").alias("max_cents"),
         )
-        .transform(bounded_sort, F.col("bucket").asc_nulls_first())
     )
 
 
+@query("o_orderpriority")
 def percentile_cont_vs_disc_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONT vs DISC quantile tie semantics side by side (§2B percentile
     surface, the contrast the round-9 planted duplicate-price tie class
@@ -5339,11 +5379,11 @@ def percentile_cont_vs_disc_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
           ON o.o_orderpriority <=> q.o_orderpriority
          AND o.o_totalprice = q.p50_disc
         GROUP BY q.o_orderpriority, q.n_priced, q.p50_cont, q.p50_disc
-        ORDER BY q.o_orderpriority NULLS FIRST
         """
     )
 
 
+@query("day", shape="bounded")
 def cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expanding COUNT(DISTINCT) — daily active-user accumulation — via
     the first-seen trick (§2B window surface): a naive
@@ -5374,10 +5414,10 @@ def cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "new_users",
             F.sum("new_users").over(w).alias("cum_users"),
         )
-        .transform(bounded_sort, "day")
     )
 
 
+@query("c_mktsegment", shape="bounded")
 def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of customer revenue per market segment — the
     inequality/concentration profile a corpus-curation pipeline runs on
@@ -5441,10 +5481,10 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("gini"),
             dsum(F.col("rev")).alias("total_revenue"),
         )
-        .transform(bounded_sort, F.col("c_mktsegment").asc_nulls_first())
     )
 
 
+@query("lang", shape="bounded")
 def entropy_source_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon entropy of the source mix per language — the diversity
     metric behind mixture-balancing dashboards (a lang whose corpus
@@ -5476,10 +5516,10 @@ def entropy_source_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_sources").alias("n_sources"),
             F.round(F.sum(term).cast("double"), 6).alias("source_entropy"),
         )
-        .transform(bounded_sort, F.col("lang").asc_nulls_first())
     )
 
 
+@query("bm25 DESC", "doc_id", limit=15)
 def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 relevance of a fixed query against the corpus (§2B text
     surface, the IR twin of ``tfidf_top_terms``): Okapi k1=1.2 b=0.75,
@@ -5540,11 +5580,10 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_terms_hit"),
         )
     )
-    return per_doc.orderBy(
-        F.col("bm25").desc(), F.col("doc_id").asc()
-    ).limit(15)
+    return per_doc
 
 
+@query("l_returnflag", shape="bounded")
 def weighted_median_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantity-weighted median price per return flag — the weighted
     quantile every sampling-budget allocator needs (median byte-weighted
@@ -5590,10 +5629,10 @@ def weighted_median_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("l_extendedprice").alias("weighted_median_price"),
             F.max(F.col("totw").cast("double")).alias("total_weight"),
         )
-        .transform(bounded_sort, F.col("l_returnflag").asc_nulls_first())
     )
 
 
+@query("r_quartile", "f_quartile", "m_quartile", shape="bounded")
 def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM (recency / frequency / monetary) quartile segmentation — the
     classic CRM cube, and the same quota-bucketing shape a curation
@@ -5647,10 +5686,10 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("avg_monetary"),
         )
-        .transform(bounded_sort, "r_quartile", "f_quartile", "m_quartile")
     )
 
 
+@query("lift DESC", "brand_a", "brand_b", limit=20)
 def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association — brand-pair co-occurrence lift within
     orders (the co-click / co-citation shape): distinct (order, brand)
@@ -5749,11 +5788,10 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lift"),
         )
     )
-    return out.orderBy(
-        F.col("lift").desc(), "brand_a", "brand_b"
-    ).limit(20)
+    return out
 
 
+@query("p_brand")
 def skyline_parts_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto skyline per brand — parts no sibling dominates on
     (cheaper-or-equal price, bigger-or-equal size, strictly better on
@@ -5796,10 +5834,10 @@ def skyline_parts_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_brand",
             "left",
         )
-        .orderBy(F.col("p_brand").asc_nulls_first())
     )
 
 
+@query()
 def notin_null_aware_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT IN vs NOT EXISTS null semantics, measured (§2B correlated-
     subquery surface, the null-aware half): the subquery's segment list
@@ -5832,6 +5870,7 @@ def notin_null_aware_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query()
 def did_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences — the pre/post × treated/control
     contrast behind every curation A/B readback (did the new filter
@@ -5884,6 +5923,7 @@ def did_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("c_mktsegment")
 def allocation_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Largest-remainder (Hamilton) apportionment of a fixed budget of
     10,000 sampling slots across market segments, proportional to
@@ -5919,11 +5959,11 @@ def allocation_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN r <= leftover THEN 1 ELSE 0 END AS extra,
                base + CASE WHEN r <= leftover THEN 1 ELSE 0 END AS allocated
         FROM ranked
-        ORDER BY c_mktsegment NULLS FIRST
         """
     )
 
 
+@query("c_mktsegment", shape="bounded")
 def crosstab_chi2_segment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-squared contingency profile of segment × priority —
     the independence screen behind "does domain correlate with quality
@@ -5968,10 +6008,10 @@ def crosstab_chi2_segment_priority(spark: SparkSession, sf_dir: str) -> DataFram
             F.count(F.lit(1)).alias("n_cells"),
             F.round(F.sum("term").cast("double"), 6).alias("chi2_contrib"),
         )
-        .transform(bounded_sort, F.col("c_mktsegment").asc_nulls_first())
     )
 
 
+@query("wilson_lb DESC", "event_type", shape="bounded")
 def wilson_ctr_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilson score lower bound per event type — the small-sample-safe
     success-rate ranking (a 3/3 type must NOT outrank a 950/1000 type,
@@ -6003,13 +6043,10 @@ def wilson_ctr_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(p, 6).alias("rate"),
             F.round(wilson, 6).alias("wilson_lb"),
         )
-        .transform(bounded_sort, 
-            F.col("wilson_lb").desc(),
-            F.col("event_type").asc_nulls_first(),
-        )
     )
 
 
+@query("decile", shape="bounded")
 def decile_lift_monetary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile lift table over customer spend — the concentration
     readback ("the top decile holds X% of revenue") that pairs with
@@ -6050,10 +6087,10 @@ def decile_lift_monetary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("cum_share"),
         )
-        .transform(bounded_sort, "decile")
     )
 
 
+@query()
 def autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1 autocorrelation of the daily revenue series — the
     seasonality probe a forecasting pipeline runs before choosing a
@@ -6096,172 +6133,6 @@ def autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select(
         "n_pairs", F.round(r, 6).alias("autocorr_lag1")
     )
-
-
-# --- registry ------------------------------------------------------------
-
-# Declaration order carries no meaning; tests/test_oracle_parity.py
-# runs every oracle-backed pair.
-QUERIES: dict[str, QueryFn] = {
-    "fingerprint_documents": fingerprint_documents,
-    "fuzzy_blocked_match": fuzzy_blocked_match,
-    "lang_id_documents": lang_id_documents,
-    "map_fns_events": map_fns_events,
-    "neardup_cluster_assign": neardup_cluster_assign,
-    "neardup_jaccard_pairs": neardup_jaccard_pairs,
-    "ngram_top_bigrams": ngram_top_bigrams,
-    "pipeline_training_corpus": pipeline_training_corpus,
-    "repetition_profile_documents": repetition_profile_documents,
-    "string_fns_documents": string_fns_documents,
-    "text_quality_profile": text_quality_profile,
-    "tfidf_top_terms": tfidf_top_terms,
-    "try_cast_typed_backfill": try_cast_typed_backfill,
-    "udtf_chunk_documents": udtf_chunk_documents,
-    "unigram_logprob_score": unigram_logprob_score,
-    "percentile_cont_vs_disc_ties": percentile_cont_vs_disc_ties,
-    "cumulative_distinct_users": cumulative_distinct_users,
-    "gini_revenue_concentration": gini_revenue_concentration,
-    "entropy_source_by_lang": entropy_source_by_lang,
-    "bm25_doc_scores": bm25_doc_scores,
-    "weighted_median_lineitem": weighted_median_lineitem,
-    "rfm_customer_segments": rfm_customer_segments,
-    "basket_pair_lift": basket_pair_lift,
-    "skyline_parts_pareto": skyline_parts_pareto,
-    "notin_null_aware_segments": notin_null_aware_segments,
-    "did_promo_effect": did_promo_effect,
-    "allocation_largest_remainder": allocation_largest_remainder,
-    "crosstab_chi2_segment_priority": crosstab_chi2_segment_priority,
-    "wilson_ctr_event_types": wilson_ctr_event_types,
-    "decile_lift_monetary": decile_lift_monetary,
-    "autocorr_daily_revenue": autocorr_daily_revenue,
-    "benford_first_digit_prices": benford_first_digit_prices,
-    "domain_quota_topn": domain_quota_topn,
-    "cdc_latest_per_key": cdc_latest_per_key,
-    "theta_cohort_overlap": theta_cohort_overlap,
-    "stats_regression_lineitem": stats_regression_lineitem,
-    "nullsafe_join_segments": nullsafe_join_segments,
-    "window_range_7day_spend": window_range_7day_spend,
-    "robust_stats_lineitem": robust_stats_lineitem,
-    "cohort_retention_events": cohort_retention_events,
-    "join_left_outer_counts": join_left_outer_counts,
-    "join_semi_customers": join_semi_customers,
-    "join_anti_customers": join_anti_customers,
-    "join_broadcast_supplier_geo": join_broadcast_supplier_geo,
-    "join_full_outer_spend_freq": join_full_outer_spend_freq,
-    "join_salted_user_events": join_salted_user_events,
-    "skew_profile_event_keys": skew_profile_event_keys,
-    "embedding_quantize_stats": embedding_quantize_stats,
-    "exists_late_shipment_orders": exists_late_shipment_orders,
-    "scalar_subquery_small_qty": scalar_subquery_small_qty,
-    "neardup_crossbatch_screen": neardup_crossbatch_screen,
-    "agg_approx_percentiles": agg_approx_percentiles,
-    "window_distribution_ranks": window_distribution_ranks,
-    "session_window_events": session_window_events,
-    "variant_fns_events": variant_fns_events,
-    "sample_hash_stratified": sample_hash_stratified,
-    "pii_redact_profile": pii_redact_profile,
-    "profile_lineitem_columns": profile_lineitem_columns,
-    "ann_pq_topk": ann_pq_topk,
-    "multimodal_audio_features": multimodal_audio_features,
-    "multimodal_image_profile": multimodal_image_profile,
-    "multimodal_video_profile": multimodal_video_profile,
-    "agg_approx_distinct": agg_approx_distinct,
-    "agg_cube_segment_status": agg_cube_segment_status,
-    "agg_percentiles_orders": agg_percentiles_orders,
-    "agg_rollup_status_priority": agg_rollup_status_priority,
-    "agg_salted_user_events": agg_salted_user_events,
-    "inline_order_charges": inline_order_charges,
-    "window_first_last_ignore_nulls": window_first_last_ignore_nulls,
-    "argminmax_orders_priority": argminmax_orders_priority,
-    "bitmap_hour_activity": bitmap_hour_activity,
-    "date_spine_order_gaps": date_spine_order_gaps,
-    "bool_flags_by_segment": bool_flags_by_segment,
-    "qualify_running_budget_cut": qualify_running_budget_cut,
-    "grouping_id_sales_matrix": grouping_id_sales_matrix,
-    "array_topk_quantized_embeddings": array_topk_quantized_embeddings,
-    "map_zip_with_merge_profiles": map_zip_with_merge_profiles,
-    "union_byname_backfill_ingest": union_byname_backfill_ingest,
-    "semantic_cluster_assign": semantic_cluster_assign,
-    "ann_ivf_topk": ann_ivf_topk,
-    "ann_lsh_bucketed": ann_lsh_bucketed,
-    "array_fns_embeddings": array_fns_embeddings,
-    "cosine_topk_embeddings": cosine_topk_embeddings,
-    "date_fns_events": date_fns_events,
-    "dedup_exact_docs": dedup_exact_docs,
-    "json_fns_events": json_fns_events,
-    "math_fns_lineitem": math_fns_lineitem,
-    "multimodal_audio_profile": multimodal_audio_profile,
-    "multimodal_decode_profile": multimodal_decode_profile,
-    "neardup_embedding_cosine": neardup_embedding_cosine,
-    "neardup_minhash_lsh": neardup_minhash_lsh,
-    "pivot_status_by_priority": pivot_status_by_priority,
-    "simhash_documents": simhash_documents,
-    "sync_merge_orders": sync_merge_orders,
-    "tumbling_window_events": tumbling_window_events,
-    "udaf_geomean_orders": udaf_geomean_orders,
-    "unpivot_lineitem_metrics": unpivot_lineitem_metrics,
-    "window_lag_sessionize": window_lag_sessionize,
-    "window_running_total": window_running_total,
-    "agg_listagg_mode_orders": agg_listagg_mode_orders,
-    "lateral_topn_per_group": lateral_topn_per_group,
-    "window_topn_orders_per_customer": window_topn_orders_per_customer,
-    "set_union_segments": set_union_segments,
-    "set_except_inactive": set_except_inactive,
-    "set_intersect_buyers": set_intersect_buyers,
-    "topk_expensive_orders": topk_expensive_orders,
-    "dedup_exact_summary": dedup_exact_summary,
-    "filter_or_of_and_revenue": filter_or_of_and_revenue,
-    "set_algebra_token_halves": set_algebra_token_halves,
-    "str_to_map_event_kv": str_to_map_event_kv,
-    "percentile_disc_prices": percentile_disc_prices,
-    "regexp_extract_all_words": regexp_extract_all_words,
-    "map_filter_concat_profile": map_filter_concat_profile,
-    "width_bucket_price_histogram": width_bucket_price_histogram,
-    "notexists_dormant_customers": notexists_dormant_customers,
-    "conditional_promo_revenue": conditional_promo_revenue,
-    "grouping_sets_orders": grouping_sets_orders,
-    "asof_last_error_before_click": asof_last_error_before_click,
-    "range_join_error_context": range_join_error_context,
-    "agg_orders_stats": agg_orders_stats,
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_local_supplier_volume": q5_local_supplier_volume,
-    "q10_returned_customers": q10_returned_customers,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q8_market_share": q8_market_share,
-    "q18_large_volume_customers": q18_large_volume_customers,
-    "q2_min_cost_supplier": q2_min_cost_supplier,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q11_important_parts": q11_important_parts,
-    "q13_customer_distribution": q13_customer_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q21_single_blame_supplier": q21_single_blame_supplier,
-    "q9_product_type_profit": q9_product_type_profit,
-    "q12_late_lines_by_status": q12_late_lines_by_status,
-    "q16_supplier_count_by_part": q16_supplier_count_by_part,
-    "q20_heavy_part_suppliers": q20_heavy_part_suppliers,
-    "contamination_ngram_screen": contamination_ngram_screen,
-    "dedup_substring_spans": dedup_substring_spans,
-    "quality_ensemble_buckets": quality_ensemble_buckets,
-    "dedup_cross_batch_novelty": dedup_cross_batch_novelty,
-    "dedup_canonical_docs": dedup_canonical_docs,
-    "pack_sequences_offsets": pack_sequences_offsets,
-    "mixture_temperature_sample": mixture_temperature_sample,
-    "raster_contours_tiles": raster_contours_tiles,
-    "recursive_cte_customer_tree": recursive_cte_customer_tree,
-    "date_arith_orders": date_arith_orders,
-    "spatial_box_join_counts": spatial_box_join_counts,
-    "resample_ffill_events": resample_ffill_events,
-    "funnel_conversion_events": funnel_conversion_events,
-    "sketch_rollup_users": sketch_rollup_users,
-    "kll_quantile_rollup_prices": kll_quantile_rollup_prices,
-    "interval_coalesce_events": interval_coalesce_events,
-    "twap_events": twap_events,
-    "scd2_event_type_runs": scd2_event_type_runs,
-    "histogram_orders_prices": histogram_orders_prices,
-    "markov_transitions_events": markov_transitions_events,
-    "rank_ties_topn_priority": rank_ties_topn_priority,
-}
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

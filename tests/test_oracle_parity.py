@@ -1,6 +1,9 @@
 """Local twin of the driver's t2 gate: every declared query with an
-oracle must match DuckDB on row count, column names, and values
-(order-insensitive, column-name-sorted) at the test scale factor."""
+oracle must match DuckDB on row count, column names, and values, row by
+row in emitted order (the output hash is order-sensitive), with each
+row's values taken in column-name order, at the test scale factor.
+Every query must also leave the session's cache as it found it, and the
+registry must hold exactly the declared set."""
 
 from __future__ import annotations
 
@@ -9,6 +12,23 @@ import math
 import pytest
 
 from dask_felleskomponenter_spark.plans import ORACLES, QUERIES
+
+#: The declared queries without an oracle twin (plans/oracles.py names
+#: why each has none). A query that loses its ``@query`` decorator
+#: leaves QUERIES silently; this list makes that a failure.
+ROWS_ONLY = {
+    "agg_approx_distinct",
+    "sketch_rollup_users",
+    "agg_approx_percentiles",
+    "kll_quantile_rollup_prices",
+    "neardup_minhash_lsh",
+    "simhash_documents",
+    "neardup_crossbatch_screen",
+    "ann_lsh_bucketed",
+    "ann_ivf_topk",
+    "ann_pq_topk",
+    "raster_contours_tiles",
+}
 
 
 def _normalize(rows: list[dict], cols: list[str]) -> list[tuple]:
@@ -31,18 +51,34 @@ def _normalize(rows: list[dict], cols: list[str]) -> list[tuple]:
         return v
 
     ordered_cols = sorted(cols)
-    return sorted(
-        (tuple(norm_val(r[c]) for c in ordered_cols) for r in rows),
-        # None-safe total order: LEFT-join queries carry NULL columns and
-        # plain tuple comparison raises TypeError on None vs int
-        key=lambda t: tuple((x is None, repr(x)) for x in t),
+    return [tuple(norm_val(r[c]) for c in ordered_cols) for r in rows]
+
+
+def _run_uncached(spark, sf_dir, name):
+    """Build and collect one query from an empty cache; it must leave
+    no CacheManager entry behind (a cached subtree left registered is
+    substituted into later plans of the same session)."""
+    spark.catalog.clearCache()
+    sdf = QUERIES[name](spark, sf_dir)
+    rows = sdf.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left a cached plan registered in the session"
     )
+    if not QUERIES[name].order:
+        assert len(rows) <= 1, f"{name} declares no order but emits {len(rows)} rows"
+    return sdf, rows
+
+
+def test_registry_is_the_declared_set():
+    assert not set(ORACLES) & ROWS_ONLY
+    assert set(QUERIES) == set(ORACLES) | ROWS_ONLY
+    assert len(QUERIES) == 158
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES.keys()))
 def test_query_matches_oracle(spark, duck, sf_dir, name):
-    sdf = QUERIES[name](spark, sf_dir)
-    spark_rows = [r.asDict() for r in sdf.collect()]
+    sdf, rows = _run_uncached(spark, sf_dir, name)
+    spark_rows = [r.asDict() for r in rows]
     spark_cols = sdf.columns
 
     ddf = duck.execute(ORACLES[name])
@@ -64,13 +100,10 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
         pytest.fail(f"{name}: value mismatch; first diffs: {diffs}")
 
 
-@pytest.mark.parametrize(
-    "name", sorted(set(QUERIES.keys()) - set(ORACLES.keys()))
-)
+@pytest.mark.parametrize("name", sorted(ROWS_ONLY))
 def test_rows_only_queries_run(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.columns) > 0
+    sdf, _ = _run_uncached(spark, sf_dir, name)
+    assert len(sdf.columns) > 0
 
 
 # --- type faithfulness -----------------------------------------------------

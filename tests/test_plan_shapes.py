@@ -1001,3 +1001,47 @@ def test_blocked_cosine_scans_embeddings_once(spark):
         "operator: expected exactly one embedding-column scan, got "
         f"{len(scans)}:\n" + "\n---\n".join(s.splitlines()[0] for s in scans)
     )
+
+
+def _top_operators(spark, name: str) -> list[str]:
+    """Operator lines of a query's physical plan, top down, tree
+    prefixes stripped (the initial plan under AQE)."""
+    plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan()
+    lines = [re.sub(r"^[\s:|+-]*", "", ln) for ln in plan.toString().splitlines()]
+    return [ln for ln in lines if not ln.startswith("AdaptiveSparkPlan")]
+
+
+@pytest.mark.parametrize(
+    "name, shape, limit",
+    [
+        ("q1_pricing_summary", "bounded", None),
+        ("join_semi_customers", "sorted", None),
+        ("text_quality_profile", "staged", None),
+        ("topk_expensive_orders", "sorted", 10),
+    ],
+)
+def test_declared_shape_tops_the_plan(spark, name, shape, limit):
+    """One representative per output shape: ``plans.queries.finish``
+    must plan each declared shape as its docstring says."""
+    fn = QUERIES[name]
+    assert (fn.shape, fn.limit) == (shape, limit)
+    ops = _top_operators(spark, name)
+    plan = "\n".join(ops)
+    if limit is not None:
+        assert ops[0].startswith(f"TakeOrderedAndProject(limit={limit},")
+        assert "rangepartitioning" not in plan
+        return
+    exchanges = [op for op in ops if op.startswith("Exchange")]
+    if shape == "bounded":
+        assert re.fullmatch(r"Sort \[.*\], false, 0", ops[0])
+        assert ops[1].startswith("Exchange SinglePartition, REPARTITION_BY_NUM")
+        assert "rangepartitioning" not in plan
+        return
+    assert re.fullmatch(r"Sort \[.*\], true, 0", ops[0])
+    assert ops[1].startswith("Exchange rangepartitioning(")
+    lead = fn.order[0]
+    staged = re.match(
+        rf"Exchange hashpartitioning\({lead}#\d+L?, \d+\), REPARTITION_BY_NUM",
+        exchanges[1] if len(exchanges) > 1 else "",
+    )
+    assert bool(staged) == (shape == "staged"), exchanges

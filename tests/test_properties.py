@@ -1539,6 +1539,17 @@ def test_bench_plan_hash_ignores_jvm_wide_counters(spark):
         first = bench.plan_hash(QUERIES[name](spark, SF_DIR))
         assert bench.plan_hash(QUERIES[name](spark, SF_DIR)) == first, name
 
+    # the 100-character cut can land after a line break inside a trim
+    # whitespace literal (wide ids) or before it (narrow ids)
+    scan = (
+        "+- FileScan parquet [doc_id#{a}L,text#{b}] Batched: true, "
+        "DataFilters: [(size(trim(text#{b}, Some(\t\n\r ){cut}, "
+        "Format: Parquet, PushedFilters: []"
+    )
+    narrow = scan.format(a=1, b=2, cut="), false) > 0)]")
+    wide = scan.format(a=1234567, b=1234568, cut="...")
+    assert bench.plan_digest(narrow) == bench.plan_digest(wide)
+
 
 def test_window_output_columns_raise_on_collision(spark):
     """Round-9 review: lag_sessionize and running_total silently
