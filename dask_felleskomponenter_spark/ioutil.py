@@ -1,10 +1,12 @@
-"""Shared crash-safe directory-swap recovery.
+"""Shared crash-safe directory swap.
 
-Three call sites perform the same sibling-rename swap (write to a
-uuid-named ``.staging-*`` dir → rename live dir to ``.old`` → rename
-staging in → drop ``.old``): ``sync/incremental.py``, ``sync/merge.py``,
-and ``sources/tables.py::compact_parquet``. This module owns the
-matching recovery so the three copies cannot drift:
+Three call sites rewrite a directory by the same sibling-rename swap
+(write to a uuid-named ``.staging-*`` dir → rename live dir to
+``.old`` → rename staging in → drop ``.old``): ``sync/incremental.py``,
+``sync/merge.py`` and ``sources/tables.py::compact_parquet``. This
+module owns the whole swap — ``swap_publish`` names the staging dir,
+commits it and cleans it up, and runs the recovery on entry — so the
+three callers cannot drift. The recovery:
 
 - a crash between the two renames leaves the only durable copy in
   ``.old`` with the live path missing → restore it;
@@ -28,6 +30,7 @@ import contextlib
 import os
 import shutil
 import time
+import uuid
 
 STALE_STAGING_AGE_S = 3600.0
 
@@ -71,20 +74,37 @@ def path_mutex(path: str):
         os.close(fd)  # releases the flock
 
 
-def commit_swap(path: str, staging_dir: str) -> None:
-    """Publish a fully-written ``staging_dir`` over ``path`` via the
-    sibling-rename swap (live → ``.old`` → staging in → drop ``.old``).
-    A crash at any step is recovered by ``recover_interrupted_swap``;
-    a missing live path (first-call bootstrap) skips the ``.old`` leg.
-    Owned here so the three swap call sites cannot drift."""
-    old_dir = path + ".old"
-    if os.path.exists(old_dir):
-        shutil.rmtree(old_dir)
-    if os.path.exists(path):
-        os.rename(path, old_dir)
-    os.rename(staging_dir, path)
-    if os.path.exists(old_dir):
-        shutil.rmtree(old_dir)
+@contextlib.contextmanager
+def swap_publish(path: str):
+    """Publish a rewrite of ``path`` through the sibling-rename swap.
+
+    Recovers an interrupted swap of ``path`` first, then yields a fresh
+    ``{path}.staging-<uuid>`` path (not yet created) for the body to
+    write. When the body returns, the staging dir is swapped in (live →
+    ``.old`` → staging in → drop ``.old``; a missing live path, the
+    first-call bootstrap, skips the ``.old`` leg). A crash at any step
+    is recovered by the next entry. The staging dir is removed whether
+    the body returns or raises, so a failed write leaves the live data
+    as it was.
+
+    Callers hold ``path_mutex(path)`` around this block and read the
+    published data back after it, still under the mutex: inside the
+    block the live path still holds the old data."""
+    recover_interrupted_swap(path)
+    staging_dir = f"{path}.staging-{uuid.uuid4().hex}"
+    try:
+        yield staging_dir
+        old_dir = path + ".old"
+        if os.path.exists(old_dir):
+            shutil.rmtree(old_dir)
+        if os.path.exists(path):
+            os.rename(path, old_dir)
+        os.rename(staging_dir, path)
+        if os.path.exists(old_dir):
+            shutil.rmtree(old_dir)
+    finally:
+        if os.path.exists(staging_dir):
+            shutil.rmtree(staging_dir, ignore_errors=True)
 
 
 def recover_interrupted_swap(
@@ -101,7 +121,7 @@ def recover_interrupted_swap(
         # reap (a one-shot job never swaps this path again) — drop it,
         # mirroring the catalog twin (dedup_store._recover_history's
         # leftover-__old drop). ignore_errors: a concurrent
-        # commit_swap's own final rmtree may race us here; either
+        # swap_publish's own final rmtree may race us here; either
         # winner leaves the same state.
         shutil.rmtree(old_dir, ignore_errors=True)
     parent = os.path.dirname(os.path.abspath(path)) or "."

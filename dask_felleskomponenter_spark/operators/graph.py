@@ -21,7 +21,7 @@ output-stability comparison); driver-side loop control is inherent to
 iterative algorithms (GraphX / GraphFrames use the same model) and
 moves O(1) bytes per round.
 
-Lineage: every round ends in ``localCheckpoint(eager=True)`` — without
+Lineage: every round ends in ``localCheckpoint`` — without
 it the iterated self-joins grow the logical plan exponentially and
 Catalyst analysis dominates wall-clock after ~10 rounds. On a real
 cluster set ``spark.sparkContext.setCheckpointDir`` and swap in
@@ -291,15 +291,15 @@ def connected_components(
         cur = e
         for _ in range(_CC_MAX_ROUNDS):
             # eager=False: the logical plan is truncated (LogicalRDD)
-            # immediately, but materialization is deferred to the
-            # convergence probe below — whose shuffle-map stage scans
-            # every stars partition anyway — so each round runs ONE job
-            # (probe incl. star computation + checkpoint write) instead
-            # of two (separate eager-checkpoint job, then probe jobs).
-            # Measured per-round driver latency is the round's floor at
-            # this scale, so one fewer job is one fewer ~0.2 s barrier.
-            # Round 1 reads the persisted edge list straight from the
-            # cache (no separate checkpoint job).
+            # immediately and the checkpoint blocks are written by the
+            # convergence probe below, not by a separate eager job. A
+            # round is still many jobs: under AQE every shuffle stage
+            # runs as a job of its own, and localCheckpoint(eager=False)
+            # runs the shuffle stages of the subtree it truncates. A
+            # 64-node chain measured 19 jobs in round 1 and 13 in each
+            # later round (pinned in tests/test_graph.py); per-job
+            # driver latency is the round's floor at this scale. Round 1
+            # reads the persisted edge list straight from the cache.
             stars = _small_star(
                 _large_star(cur, loop_parts), loop_parts
             ).localCheckpoint(eager=False)
@@ -315,9 +315,9 @@ def connected_components(
             # connectivity, so stopping at (1)∧(2) is exact — and still
             # fires one round earlier than the old output-stability
             # signature (which recomputed both stars just to observe no
-            # change). Both conditions ride ONE job over the
-            # checkpointed stars (the old shape ran a semi-join job for
-            # (1) and an aggregate job for (2) every round): each edge
+            # change). Both conditions ride ONE aggregate over the
+            # checkpointed stars (the old shape ran a semi-join for (1)
+            # and an aggregate for (2) every round): each edge
             # contributes its child (a, tagged 1) and its root (b,
             # tagged 0) to one map-side-combinable aggregate, where a
             # node with more than one child row violates (2) and a node

@@ -2183,13 +2183,13 @@ def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_udx(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs.createOrReplaceTempView("_udtf_chunk_src")
     return spark.sql(
         """
         SELECT doc_id, c.chunk_index, c.chunk_text, c.n_tokens
-        FROM _udtf_chunk_src,
+        FROM {docs},
              LATERAL chunk_document(text, 32, 24) AS c
-        """
+        """,
+        docs=docs,
     )
 
 
@@ -3821,25 +3821,23 @@ def recursive_cte_customer_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-at-a-time loop. The engine-level iterative twin (explicit loop +
     checkpointing, for graphs too cyclic for UNION-ALL recursion) is
     ``operators/graph.py::connected_components``."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "customer_rcte"
-    )
     return spark.sql(
         """
         WITH RECURSIVE tree AS (
           SELECT c_custkey AS node, c_custkey AS root, 0 AS depth
-          FROM customer_rcte
+          FROM {customer}
           WHERE c_custkey < 10
           UNION ALL
           SELECT c.c_custkey, t.root, t.depth + 1
-          FROM customer_rcte c
+          FROM {customer} c
           JOIN tree t
             ON CAST(FLOOR(c.c_custkey / 10.0) AS BIGINT) = t.node
           WHERE c.c_custkey >= 10
         )
         SELECT node, root, CAST(depth AS INT) AS depth
         FROM tree
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -4252,7 +4250,9 @@ def lateral_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     The relations are passed as spark.sql() DataFrame arguments, not
     temp views — a fixed createOrReplaceTempView name would clobber
     any same-named session view and leak catalog state after plan
-    construction (every other registry query is side-effect free)."""
+    construction. No registry query leaves a temp view behind;
+    ``udtf_chunk_documents`` still registers the session functions
+    ``chunk_document`` and ``geometric_mean``."""
     return spark.sql(
         """
         SELECT c.c_custkey, t.o_orderkey, t.price, t.rnk
@@ -5212,8 +5212,6 @@ def percentile_disc_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the 5-value priority key; percentile_disc
     needs the sorted group but the groups are per-priority partitions,
     never a global sort."""
-    orders = load_table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("_orders_pdisc")
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -5224,9 +5222,10 @@ def percentile_disc_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS p50,
                percentile_disc(0.9) WITHIN GROUP (ORDER BY o_totalprice)
                  AS p90
-        FROM _orders_pdisc
+        FROM {orders}
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -5358,8 +5357,6 @@ def percentile_cont_vs_disc_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on the 5-value priority key; per-group sorts,
     never global."""
-    orders = load_table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("_orders_pcd")
     return spark.sql(
         """
         WITH q AS (
@@ -5369,17 +5366,18 @@ def percentile_cont_vs_disc_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
                        WITHIN GROUP (ORDER BY o_totalprice), 6) AS p50_cont,
                  percentile_disc(0.5)
                        WITHIN GROUP (ORDER BY o_totalprice) AS p50_disc
-          FROM _orders_pcd
+          FROM {orders}
           GROUP BY o_orderpriority
         )
         SELECT q.o_orderpriority, q.n_priced, q.p50_cont, q.p50_disc,
                ROUND(q.p50_cont - q.p50_disc, 6) AS cont_disc_gap,
                COUNT(o.o_totalprice) AS n_at_disc_median
-        FROM q LEFT JOIN _orders_pcd o
+        FROM q LEFT JOIN {orders} o
           ON o.o_orderpriority <=> q.o_orderpriority
          AND o.o_totalprice = q.p50_disc
         GROUP BY q.o_orderpriority, q.n_priced, q.p50_cont, q.p50_disc
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -5850,23 +5848,22 @@ def notin_null_aware_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: both branches broadcast the tiny distinct segment list; one
     scan each."""
-    customer = load_table(spark, sf_dir, "customer")
-    customer.createOrReplaceTempView("_cust_nas")
     return spark.sql(
         """
         SELECT
-          (SELECT COUNT(*) FROM _cust_nas) AS n_customers,
-          (SELECT COUNT(*) FROM _cust_nas
+          (SELECT COUNT(*) FROM {customer}) AS n_customers,
+          (SELECT COUNT(*) FROM {customer}
             WHERE c_mktsegment NOT IN
-                  (SELECT NULLIF(c_mktsegment, 'BUILDING') FROM _cust_nas))
+                  (SELECT NULLIF(c_mktsegment, 'BUILDING') FROM {customer}))
             AS n_not_in,
-          (SELECT COUNT(*) FROM _cust_nas c
+          (SELECT COUNT(*) FROM {customer} c
             WHERE NOT EXISTS
-                  (SELECT 1 FROM _cust_nas d
+                  (SELECT 1 FROM {customer} d
                     WHERE NULLIF(d.c_mktsegment, 'BUILDING')
                           = c.c_mktsegment))
             AS n_not_exists
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -5882,8 +5879,6 @@ def did_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles in one fixed order, rounded at the end.
 
     Scale: one scan, one 4-cell aggregate; the cutoff scalar broadcasts."""
-    orders = load_table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("_orders_did")
     return spark.sql(
         """
         WITH span AS (
@@ -5891,7 +5886,7 @@ def did_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
                           CAST(DATEDIFF(MAX(CAST(o_orderdate AS DATE)),
                                         MIN(CAST(o_orderdate AS DATE)))
                                DIV 2 AS INT)) AS cutoff
-          FROM _orders_did WHERE o_orderdate IS NOT NULL
+          FROM {orders} WHERE o_orderdate IS NOT NULL
         ), cells AS (
           -- scalar subquery, not CROSS JOIN span: the one-row cross
           -- join plans as a BroadcastNestedLoopJoin; the scalar form
@@ -5902,7 +5897,7 @@ def did_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
                  COUNT(*) AS n,
                  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
                    / COUNT(*) AS mean_price
-          FROM _orders_did
+          FROM {orders}
           WHERE o_orderdate IS NOT NULL AND o_orderpriority IS NOT NULL
                 AND o_totalprice IS NOT NULL
           GROUP BY 1, 2
@@ -5919,7 +5914,8 @@ def did_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
                - MAX(CASE WHEN NOT treated AND NOT post THEN mean_price END)),
             6) AS did_estimate
         FROM cells
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -5935,13 +5931,11 @@ def allocation_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: a 5-row aggregate; the unpartitioned windows run over those
     5 rows, not the data."""
-    customer = load_table(spark, sf_dir, "customer")
-    customer.createOrReplaceTempView("_cust_alloc")
     return spark.sql(
         """
         WITH counts AS (
           SELECT c_mktsegment, COUNT(*) AS n_customers
-          FROM _cust_alloc GROUP BY c_mktsegment
+          FROM {customer} GROUP BY c_mktsegment
         ), quota AS (
           SELECT c_mktsegment, n_customers,
                  (10000 * n_customers) DIV SUM(n_customers) OVER () AS base,
@@ -5959,7 +5953,8 @@ def allocation_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN r <= leftover THEN 1 ELSE 0 END AS extra,
                base + CASE WHEN r <= leftover THEN 1 ELSE 0 END AS allocated
         FROM ranked
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

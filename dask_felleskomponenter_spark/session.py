@@ -9,8 +9,9 @@ that matter on a real cluster:
   coalescing and skew-join splitting — the 100 TB posture is "declare the
   plan, let AQE re-plan with real statistics".
 - ``spark.sql.shuffle.partitions`` sized to the parallelism actually
-  available (env-tunable; a 1000-executor cluster wants thousands, the
-  local test harness wants ~2×cores).
+  available (``SPARK_GRAFT_CPUS`` or the host's cores, at least 8;
+  ``get_spark(shuffle_partitions=...)`` overrides it — a 1000-executor
+  cluster wants thousands).
 - Session timezone pinned to UTC so timestamp semantics are stable across
   driver environments (parquet naive micros == displayed wall-clock).
 - Arrow enabled for any pandas interchange.
@@ -100,8 +101,7 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]):
 def _env_flag(name: str, default: str = "false") -> str:
     """Normalize a truthy env var to the literal 'true'/'false' the JVM
     boolean parser accepts ('1'/'yes' would fail at first use, not at
-    session build). One helper so the accepted-token list cannot drift
-    between knobs."""
+    session build)."""
     return (
         "true"
         if os.environ.get(name, default).strip().lower()
@@ -113,9 +113,8 @@ def _env_flag(name: str, default: str = "false") -> str:
 def _env_positive_int(name: str) -> int | None:
     """Positive integer from the environment, else None. isdigit alone
     accepts '0', which builds an INVALID session (local[0] refuses to
-    start; shuffle.partitions=0 fails every shuffling query at runtime)
-    — the guard exists to make typo'd values fall back, so zero must
-    fall back too."""
+    start) — the guard exists to make typo'd values fall back, so zero
+    must fall back too."""
     raw = os.environ.get(name, "").strip()
     return int(raw) if raw.isdigit() and int(raw) > 0 else None
 
@@ -156,12 +155,7 @@ def get_spark(
         if master is None and not _external_master_configured():
             master = f"local[{par}]"
     if shuffle_partitions is None:
-        # positive-int-guarded like SPARK_GRAFT_CPUS: a typo'd value —
-        # including '0' — falls back instead of building a session that
-        # fails at runtime
-        shuffle_partitions = _env_positive_int(
-            "SPARK_GRAFT_SHUFFLE_PARTITIONS"
-        ) or max(par, 8)
+        shuffle_partitions = max(par, 8)
 
     # Pre-importing worker daemon (pydaemon.py): with worker reuse OFF
     # (required — see below), every task forks a fresh Python worker
@@ -215,10 +209,7 @@ def get_spark(
         # applyInPandas stage measured 10-40s (vs 2s with fresh forks).
         # Linux fork via the pyspark daemon is cheap; measured no
         # regression on the non-UDF query set.
-        .config(
-            "spark.python.worker.reuse",
-            _env_flag("SPARK_GRAFT_PY_WORKER_REUSE"),
-        )
+        .config("spark.python.worker.reuse", "false")
         # The context cleaner only reclaims shuffle files/broadcasts when
         # driver GC collects their weak refs; with a 16g heap that can be
         # never in a long session, so disk state accumulates across a

@@ -8,15 +8,17 @@ re-shuffle the entire history per batch — the history side dwarfs every
 batch, so the layout must amortize its shuffle once at write time:
 
 - The history is a **bucketed managed table** of content hashes
-  (``bucketBy(n_buckets, hash)``, sorted) — 32 bytes + provenance per
-  distinct document ever seen, pre-partitioned on the join key.
+  (``n_buckets`` buckets on the hash, sorted; ``tables.write_bucketed``)
+  — 32 bytes + provenance per distinct document ever seen,
+  pre-partitioned on the join key.
 - Screening is a **left-anti join on the bucket column**: Spark shuffles
   only the incoming batch into the matching bucket layout; the history
   scan carries NO Exchange (plan-pinned in ``tests/test_dedup_store.py``)
   and, with both sides sorted, merges bucket-to-bucket.
-- Novel hashes **append** into the same bucket spec, so the invariant
-  ("history is bucketed on hash") survives every ingest cycle and the
-  next batch pays the same batch-sized cost, not a history-sized one.
+- Novel hashes **append** into the same bucket spec (one writer,
+  ``_append_history``, for both stores), so the invariant ("history is
+  bucketed on hash") survives every ingest cycle and the next batch
+  pays the same batch-sized cost, not a history-sized one.
 
 The reference has no cross-batch story (its sync is snapshot/merge into
 Postgres, ``sync_df_to_pgdb.py``); this is the LLM-pipeline extension of
@@ -31,6 +33,7 @@ from pyspark.sql import functions as F
 from dask_felleskomponenter_spark.operators.dedup import content_hash
 from dask_felleskomponenter_spark.operators.windows import keep_first
 from dask_felleskomponenter_spark.session import scoped_conf
+from dask_felleskomponenter_spark.sources.tables import write_bucketed
 
 #: Column names of the history table (fixed schema, versioned by name).
 HASH_COL = "content_sha"
@@ -244,6 +247,23 @@ def record_novel(
     history under the bucket spec. Callers that sink the novel rows
     elsewhere first (e.g. the streaming ingest) split screening from
     recording with this."""
+    _append_history(
+        novel_df, id_col, HASH_COL, table_name, batch_label, n_buckets
+    )
+
+
+def _append_history(
+    df: DataFrame,
+    id_col: str,
+    key_col: str,
+    table_name: str,
+    batch_label: str,
+    n_buckets: int,
+) -> None:
+    """Append ``(key_col, first_seen_id, ingest_batch)`` rows of ``df``
+    to a history table bucketed and sorted on ``key_col`` — the one
+    write of both stores' append path, so the bucket spec the screens
+    rely on is stated once."""
     from dask_felleskomponenter_spark.operators.shuffle import quoted_col
 
     # Roll back a crashed compaction swap BEFORE appending: a
@@ -252,21 +272,16 @@ def record_novel(
     # batch, and the next screening call's recovery — seeing both live
     # and __old — would then DROP the real corpus-sized history
     # (round-10 review). Screening callers get this via history_exists;
-    # the record-only path must run it itself.
-    _recover_history(novel_df.sparkSession, table_name)
+    # the record-only paths get it here.
+    _recover_history(df.sparkSession, table_name)
     # first_seen_id keeps id_col's own type — a cast("long") turned
     # string/UUID document ids into all-NULL provenance with no error
-    entries = novel_df.select(
-        F.col(HASH_COL),
+    entries = df.select(
+        F.col(key_col),
         quoted_col(id_col).alias(SEEN_ID_COL),
         F.lit(batch_label).alias(BATCH_COL),
     )
-    (
-        entries.write.mode("append")
-        .bucketBy(n_buckets, HASH_COL)
-        .sortBy(HASH_COL)
-        .saveAsTable(table_name)
-    )
+    write_bucketed(entries, table_name, [key_col], n_buckets, mode="append")
 
 
 def history_stats(spark: SparkSession, table_name: str) -> DataFrame:
@@ -360,11 +375,12 @@ def compact_history(
             "compact_history",
             n_rows=F.count(F.lit(1)),
         )
-        (
-            src.repartition(n_buckets, key_col)
-            .write.bucketBy(n_buckets, key_col)
-            .sortBy(key_col)
-            .saveAsTable(scratch)
+        write_bucketed(
+            src.repartition(n_buckets, key_col),
+            scratch,
+            [key_col],
+            n_buckets,
+            mode="errorifexists",
         )
     n = obs.get["n_rows"]
     spark.sql(f"DROP TABLE IF EXISTS {old}")
@@ -672,40 +688,17 @@ def record_novel_signatures(
     signature recomputation entirely — without it every ingest batch
     pays the dominant MinHash stage twice, once to screen and once to
     record the identical buckets."""
-    from dask_felleskomponenter_spark.operators.shuffle import quoted_col
-
-    # post-crash compaction rollback before the append — see
-    # record_novel (a stub live table created here would make the next
-    # recovery drop the real history under __old)
-    _recover_history(novel_df.sparkSession, table_name)
     if buckets_df is not None:
-        entries = _require_nonnull_ids(buckets_df, id_col).select(
-            F.col(BUCKET_COL),
-            quoted_col(id_col).alias(SEEN_ID_COL),
-            F.lit(batch_label).alias(BATCH_COL),
+        buckets = _require_nonnull_ids(buckets_df, id_col)
+    else:
+        # _batch_buckets, not a bare banding pass: the record path must
+        # emit the same bucket set as the screen — including the
+        # synthetic BLANK bucket — or blank docs would screen against a
+        # bucket no recording ever wrote
+        buckets = _batch_buckets(
+            _require_nonnull_ids(novel_df, id_col), id_col, text_col,
+            num_hashes, bands, rows_per_band, shingle_size,
         )
-        (
-            entries.write.mode("append")
-            .bucketBy(n_buckets, BUCKET_COL)
-            .sortBy(BUCKET_COL)
-            .saveAsTable(table_name)
-        )
-        return
-    # _batch_buckets, not a bare banding pass: the record path must
-    # emit the same bucket set as the screen — including the synthetic
-    # BLANK bucket — or blank docs would screen against a bucket no
-    # recording ever wrote
-    entries = _batch_buckets(
-        _require_nonnull_ids(novel_df, id_col), id_col, text_col,
-        num_hashes, bands, rows_per_band, shingle_size,
-    ).select(
-        F.col(BUCKET_COL),
-        quoted_col(id_col).alias(SEEN_ID_COL),
-        F.lit(batch_label).alias(BATCH_COL),
-    )
-    (
-        entries.write.mode("append")
-        .bucketBy(n_buckets, BUCKET_COL)
-        .sortBy(BUCKET_COL)
-        .saveAsTable(table_name)
+    _append_history(
+        buckets, id_col, BUCKET_COL, table_name, batch_label, n_buckets
     )

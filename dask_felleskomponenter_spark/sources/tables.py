@@ -309,7 +309,10 @@ def compact_parquet(
     single filesystem); a crash between renaming the live directory
     away and renaming the staging in is recovered on the next call from
     the ``.old`` backup."""
-    from dask_felleskomponenter_spark.ioutil import path_mutex
+    import math
+    import re
+
+    from dask_felleskomponenter_spark.ioutil import path_mutex, swap_publish
 
     # Same-host mutual exclusion as the other two swap call sites
     # (sync/merge.py, sync/incremental.py): two concurrent compactions
@@ -318,135 +321,105 @@ def compact_parquet(
     # live nor backup intact. Multi-HOST writers need a transactional
     # table format (the callers' documented posture).
     with path_mutex(path):
-        return _compact_parquet_locked(
-            spark, path, target_file_bytes, sort_cols
-        )
-
-
-def _compact_parquet_locked(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int,
-    sort_cols: list[str] | None,
-) -> int:
-    import math
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    import uuid as _uuid
-
-    from dask_felleskomponenter_spark.ioutil import (
-        commit_swap,
-        recover_interrupted_swap,
-    )
-
-    # Shared swap recovery: restore .old from an interrupted swap and
-    # reap stale uuid-named .staging-* orphans (age-guarded against
-    # concurrent compactions).
-    recover_interrupted_swap(path)
-
-    total = sum(
-        _os.path.getsize(_os.path.join(dp, f))
-        for dp, _dn, fs in _os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    # hive-partitioned layout? (key=value subdirectories at top level)
-    part_cols: list[str] = []
-    probe = path
-    while True:
-        subdirs = [
-            d
-            for d in _os.listdir(probe)
-            if _os.path.isdir(_os.path.join(probe, d))
-            and _re.match(r"^[^=]+=", d)
-        ]
-        if not subdirs:
-            break
-        part_cols.append(subdirs[0].split("=", 1)[0])
-        probe = _os.path.join(probe, subdirs[0])
-    # Partition VALUES must survive byte-identical: with type inference
-    # on, 'key=007' reads back as int 7 and rewrites as 'key=7',
-    # breaking readers that filter on the original string. Read the
-    # values as strings for the round-trip.
-    with scoped_conf(
-        spark,
-        {"spark.sql.sources.partitionColumnTypeInference.enabled": "false"},
-    ):
-        df = spark.read.parquet(path)
-    staging = f"{path}.staging-{_uuid.uuid4().hex}"
-    try:
-        if part_cols:
-            # per-partition compaction. Hashing on the partition columns
-            # alone would funnel each partition VALUE into one task and
-            # one file regardless of size, so a within-partition spread
-            # key splits hot partitions into ~target-byte chunks; the
-            # key=value layout and partition pruning survive the
-            # rewrite either way.
-            n_leaf_parts = max(
-                1,
-                len(
-                    {
-                        dp
-                        for dp, _dn, fs in _os.walk(path)
-                        if any(f.endswith(".parquet") for f in fs)
-                    }
-                ),
+        with swap_publish(path) as staging:
+            total = sum(
+                os.path.getsize(os.path.join(dp, f))
+                for dp, _dn, fs in os.walk(path)
+                for f in fs
+                if f.endswith(".parquet")
             )
-            spread = max(1, math.ceil(n_files / n_leaf_parts))
-            # The spread key must be DETERMINISTIC in the row data:
-            # under a shuffle fetch-failure/stage-retry, recomputed map
-            # tasks re-evaluate the key, and a non-deterministic one
-            # (monotonically_increasing_id, rand) can route rows to
-            # different reducers than the original run — silently
-            # duplicating or dropping rows in the rewritten (only
-            # durable) copy. Spark guards round-robin repartition
-            # against exactly this (SPARK-23207); an arbitrary
-            # non-deterministic key gets no such recompute barrier.
-            # Map-typed columns can't be hashed (Spark raises
-            # DATATYPE_MISMATCH.HASH_MAP_TYPE), so restrict the key to
-            # the hashable subset — same rule deterministic_row_salt
-            # uses. spark_partition_id() is mixed in (it is fixed by
-            # the upstream scan's splits, so still retry-deterministic)
-            # because the row hash alone sends fully-IDENTICAL rows —
-            # common in event data — to one spread bucket, rebuilding
-            # the single giant file the spread exists to break.
-            from ..operators.shuffle import hashable_columns, quoted_col
+            n_files = max(1, math.ceil(total / target_file_bytes))
+            # hive-partitioned layout? (key=value subdirectories at top level)
+            part_cols: list[str] = []
+            probe = path
+            while True:
+                subdirs = [
+                    d
+                    for d in os.listdir(probe)
+                    if os.path.isdir(os.path.join(probe, d))
+                    and re.match(r"^[^=]+=", d)
+                ]
+                if not subdirs:
+                    break
+                part_cols.append(subdirs[0].split("=", 1)[0])
+                probe = os.path.join(probe, subdirs[0])
+            # Partition VALUES must survive byte-identical: with type
+            # inference on, 'key=007' reads back as int 7 and rewrites as
+            # 'key=7', breaking readers that filter on the original
+            # string. Read the values as strings for the round-trip.
+            with scoped_conf(
+                spark,
+                {"spark.sql.sources.partitionColumnTypeInference.enabled": "false"},
+            ):
+                df = spark.read.parquet(path)
+            if part_cols:
+                # per-partition compaction. Hashing on the partition
+                # columns alone would funnel each partition VALUE into one
+                # task and one file regardless of size, so a
+                # within-partition spread key splits hot partitions into
+                # ~target-byte chunks; the key=value layout and partition
+                # pruning survive the rewrite either way.
+                n_leaf_parts = max(
+                    1,
+                    len(
+                        {
+                            dp
+                            for dp, _dn, fs in os.walk(path)
+                            if any(f.endswith(".parquet") for f in fs)
+                        }
+                    ),
+                )
+                spread = max(1, math.ceil(n_files / n_leaf_parts))
+                # The spread key must be DETERMINISTIC in the row data:
+                # under a shuffle fetch-failure/stage-retry, recomputed map
+                # tasks re-evaluate the key, and a non-deterministic one
+                # (monotonically_increasing_id, rand) can route rows to
+                # different reducers than the original run — silently
+                # duplicating or dropping rows in the rewritten (only
+                # durable) copy. Spark guards round-robin repartition
+                # against exactly this (SPARK-23207); an arbitrary
+                # non-deterministic key gets no such recompute barrier.
+                # Map-typed columns can't be hashed (Spark raises
+                # DATATYPE_MISMATCH.HASH_MAP_TYPE), so restrict the key to
+                # the hashable subset — same rule deterministic_row_salt
+                # uses. spark_partition_id() is mixed in (it is fixed by
+                # the upstream scan's splits, so still retry-deterministic)
+                # because the row hash alone sends fully-IDENTICAL rows —
+                # common in event data — to one spread bucket, rebuilding
+                # the single giant file the spread exists to break.
+                from ..operators.shuffle import hashable_columns, quoted_col
 
-            data_cols = [
-                quoted_col(c)
-                for c in hashable_columns(df.schema)
-                if c not in part_cols
+                data_cols = [
+                    quoted_col(c)
+                    for c in hashable_columns(df.schema)
+                    if c not in part_cols
+                ]
+                spread_key = F.pmod(
+                    F.xxhash64(F.spark_partition_id(), *data_cols), F.lit(spread)
+                )
+                out = df.repartition(n_files, *part_cols, spread_key)
+                if sort_cols:
+                    # partition columns FIRST: the partitionBy writer
+                    # requires its input ordered by the partition columns
+                    # and would otherwise insert its own sort — Spark's
+                    # external sort is not stable, so the requested
+                    # sort_cols order inside each file would be destroyed.
+                    # With the prefix satisfied, no extra sort is added and
+                    # the within-file order survives.
+                    out = out.sortWithinPartitions(*part_cols, *sort_cols)
+                out.write.mode("overwrite").partitionBy(*part_cols).parquet(
+                    staging
+                )
+            else:
+                out = df.coalesce(n_files)
+                if sort_cols:
+                    out = out.sortWithinPartitions(*sort_cols)
+                out.write.mode("overwrite").parquet(staging)
+        return len(
+            [
+                f
+                for _dp, _dn, fs in os.walk(path)
+                for f in fs
+                if f.endswith(".parquet")
             ]
-            spread_key = F.pmod(
-                F.xxhash64(F.spark_partition_id(), *data_cols), F.lit(spread)
-            )
-            out = df.repartition(n_files, *part_cols, spread_key)
-            if sort_cols:
-                # partition columns FIRST: the partitionBy writer
-                # requires its input ordered by the partition columns
-                # and would otherwise insert its own sort — Spark's
-                # external sort is not stable, so the requested
-                # sort_cols order inside each file would be destroyed.
-                # With the prefix satisfied, no extra sort is added and
-                # the within-file order survives.
-                out = out.sortWithinPartitions(*part_cols, *sort_cols)
-            out.write.mode("overwrite").partitionBy(*part_cols).parquet(staging)
-        else:
-            out = df.coalesce(n_files)
-            if sort_cols:
-                out = out.sortWithinPartitions(*sort_cols)
-            out.write.mode("overwrite").parquet(staging)
-        commit_swap(path, staging)
-    finally:
-        if _os.path.exists(staging):
-            _shutil.rmtree(staging, ignore_errors=True)
-    return len(
-        [
-            f
-            for _dp, _dn, fs in _os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-    )
+        )

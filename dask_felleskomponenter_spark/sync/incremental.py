@@ -19,8 +19,6 @@ replace the swap with a transactional MERGE, with the same dataflow.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,42 +80,31 @@ def refresh_incremental_summary(
     other batch's contribution (lost update). Multi-host writers need a
     transactional table format — the module docstring's Delta/Iceberg
     note."""
-    from dask_felleskomponenter_spark.ioutil import (
-        commit_swap,
-        path_mutex,
-        recover_interrupted_swap,
-    )
+    from dask_felleskomponenter_spark.ioutil import path_mutex, swap_publish
+    from dask_felleskomponenter_spark.operators.shuffle import quoted_col
 
     with path_mutex(summary_path):
-        # shared swap recovery: .old restore + age-guarded reap of
-        # orphaned .staging-<uuid> siblings (see ioutil)
-        recover_interrupted_swap(summary_path)
-        from dask_felleskomponenter_spark.operators.shuffle import quoted_col
-
-        delta = _aggregate(batch_df, keys, sum_cols)
-        if os.path.exists(summary_path):
-            old = spark.read.parquet(summary_path)
-            merge_cols = [COUNT_COL, *sum_cols, *[_nn_col(c) for c in sum_cols]]
-            # tolerate summaries written before per-column non-null counts
-            # existed: synthesize _nn_<c> = _n_rows (the old avg semantics)
-            for c in sum_cols:
-                if _nn_col(c) not in old.columns:
-                    old = old.withColumn(_nn_col(c), F.col(COUNT_COL))
-            combined = (
-                old.unionByName(delta)
-                .groupBy(*[quoted_col(k).alias(k) for k in keys])
-                .agg(*[F.sum(quoted_col(c)).alias(c) for c in merge_cols])
-            )
-        else:
-            combined = delta
-
-        staging = f"{summary_path}.staging-{uuid.uuid4().hex}"
-        try:
+        with swap_publish(summary_path) as staging:
+            delta = _aggregate(batch_df, keys, sum_cols)
+            if os.path.exists(summary_path):
+                old = spark.read.parquet(summary_path)
+                merge_cols = [
+                    COUNT_COL, *sum_cols, *[_nn_col(c) for c in sum_cols]
+                ]
+                # tolerate summaries written before per-column non-null
+                # counts existed: synthesize _nn_<c> = _n_rows (the old
+                # avg semantics)
+                for c in sum_cols:
+                    if _nn_col(c) not in old.columns:
+                        old = old.withColumn(_nn_col(c), F.col(COUNT_COL))
+                combined = (
+                    old.unionByName(delta)
+                    .groupBy(*[quoted_col(k).alias(k) for k in keys])
+                    .agg(*[F.sum(quoted_col(c)).alias(c) for c in merge_cols])
+                )
+            else:
+                combined = delta
             combined.write.mode("overwrite").parquet(staging)
-            commit_swap(summary_path, staging)
-        finally:
-            if os.path.exists(staging):
-                shutil.rmtree(staging, ignore_errors=True)
         # Materialize the returned summary WHILE still holding the
         # mutex: a lazily-read DataFrame returned after release points
         # at files a concurrent refresh's swap deletes, so the caller's

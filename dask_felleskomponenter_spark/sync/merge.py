@@ -173,67 +173,51 @@ def merge_into_path(
     transactional, no rewrite of untouched files.
     """
     import os
-    import shutil
-    import uuid
 
-    from dask_felleskomponenter_spark.ioutil import (
-        commit_swap,
-        path_mutex,
-        recover_interrupted_swap,
-    )
+    from dask_felleskomponenter_spark.ioutil import path_mutex, swap_publish
 
     spark = staging.sparkSession
     # The read-merge-swap is a read-modify-write: overlapping merges on
     # one host would each fold only their own delta and the last swap
     # would silently drop the other's — serialize under the path mutex.
     with path_mutex(target_path):
-        # Shared swap recovery: restore .old from an interrupted swap and
-        # reap stale uuid-named .staging-* orphans (age-guarded so an
-        # overlapping run cannot delete a concurrent merge's in-progress
-        # staging write mid-flight).
-        recover_interrupted_swap(target_path)
-        staging_dir = f"{target_path}.staging-{uuid.uuid4().hex}"
-        if not os.path.exists(target_path):
-            # First-call bootstrap (mirrors refresh_incremental_summary's
-            # "created on first call"): an empty target matches nothing,
-            # so the merge result is exactly the staging inserts —
-            # non-NULL, non-delete rows, update-type column dropped.
-            if update_type_col not in staging.columns:
-                raise ValueError(
-                    f"staging is missing the update-type column "
-                    f"{update_type_col!r}"
+        with swap_publish(target_path) as staging_dir:
+            if not os.path.exists(target_path):
+                # First-call bootstrap (mirrors refresh_incremental_summary's
+                # "created on first call"): an empty target matches nothing,
+                # so the merge result is exactly the staging inserts —
+                # non-NULL, non-delete rows, update-type column dropped.
+                if update_type_col not in staging.columns:
+                    raise ValueError(
+                        f"staging is missing the update-type column "
+                        f"{update_type_col!r}"
+                    )
+                # Validate the merge keys NOW, not on the second call: a
+                # typo'd key would otherwise bootstrap a durable table
+                # successfully and only error once the bad copy is already
+                # the published one. (Duplicate staging keys are legal here:
+                # an empty target has no row for several sources to hit, so
+                # Postgres MERGE would not raise either.)
+                missing = [k for k in keys if k not in staging.columns]
+                if missing:
+                    raise ValueError(f"merge keys absent from staging: {missing}")
+                from dask_felleskomponenter_spark.operators.shuffle import (
+                    quoted_col,
                 )
-            # Validate the merge keys NOW, not on the second call: a
-            # typo'd key would otherwise bootstrap a durable table
-            # successfully and only error once the bad copy is already
-            # the published one. (Duplicate staging keys are legal here:
-            # an empty target has no row for several sources to hit, so
-            # Postgres MERGE would not raise either.)
-            missing = [k for k in keys if k not in staging.columns]
-            if missing:
-                raise ValueError(f"merge keys absent from staging: {missing}")
-            from dask_felleskomponenter_spark.operators.shuffle import (
-                quoted_col,
-            )
 
-            merged = staging.filter(
-                quoted_col(update_type_col) != F.lit("delete")  # NULL-false
-            ).drop(update_type_col)
-        else:
-            target = spark.read.format(fmt).load(target_path)
-            merged = merge_upsert(
-                target,
-                staging,
-                keys,
-                update_type_col,
-                validate_unique_keys=validate_unique_keys,
-            )
-        try:
+                merged = staging.filter(
+                    quoted_col(update_type_col) != F.lit("delete")  # NULL-false
+                ).drop(update_type_col)
+            else:
+                target = spark.read.format(fmt).load(target_path)
+                merged = merge_upsert(
+                    target,
+                    staging,
+                    keys,
+                    update_type_col,
+                    validate_unique_keys=validate_unique_keys,
+                )
             merged.write.format(fmt).mode("overwrite").save(staging_dir)
-            commit_swap(target_path, staging_dir)
-        finally:
-            if os.path.exists(staging_dir):
-                shutil.rmtree(staging_dir, ignore_errors=True)
         # The return-read must bind to files INSIDE the mutex: a
         # concurrent merge/compaction on the same path has a window
         # between its two swap renames where the live dir is absent —

@@ -994,28 +994,84 @@ def test_blank_docs_screen_and_replay_idempotently(spark, table_name):
     assert sorted(r.doc_id for r in novel2.collect()) == [21]
 
 
-def test_record_novel_recovers_interrupted_compaction_first(
-    spark, table_name
-):
-    """Round-10: record_novel on the post-crash state (history under
-    __old only) used to CREATE a stub live table, making the next
-    recovery drop the real history. It must roll the swap back first."""
-    from dask_felleskomponenter_spark.sources.dedup_store import (
-        record_novel,
-    )
+def _record_exact(spark, rows, table_name, label):
+    from dask_felleskomponenter_spark.sources.dedup_store import record_novel
 
-    assert _novel_ids(spark, [(1, "aa"), (2, "bb")], table_name, "b1") == [1, 2]
-    # crash between the two compaction renames
-    spark.sql(f"ALTER TABLE {table_name} RENAME TO {table_name}__old")
-    extra = _batch(spark, [(3, "cc")]).withColumn(
+    batch = _batch(spark, rows).withColumn(
         "content_sha", F.sha2(F.col("text"), 256)
     )
-    record_novel(extra, "doc_id", table_name, "b2", n_buckets=4)
+    record_novel(batch, "doc_id", table_name, label, n_buckets=4)
+
+
+def _record_signatures(spark, rows, table_name, label):
+    from dask_felleskomponenter_spark.sources.dedup_store import (
+        record_novel_signatures,
+    )
+
+    record_novel_signatures(
+        _batch(spark, rows), "doc_id", "text", table_name, label, n_buckets=4
+    )
+
+
+def _screen_exact(spark, rows, table_name):
+    out = dedup_against_history(
+        spark, _batch(spark, rows), "doc_id", "text", table_name,
+        n_buckets=4, update=False,
+    )
+    return sorted(r["doc_id"] for r in out.collect())
+
+
+def _screen_signatures(spark, rows, table_name):
+    from dask_felleskomponenter_spark.sources.dedup_store import (
+        neardup_against_history,
+    )
+
+    out = neardup_against_history(
+        spark, _batch(spark, rows), "doc_id", "text", table_name
+    )
+    return sorted(r["doc_id"] for r in out.collect())
+
+
+RECORD_PATHS = {
+    "record_novel": (_record_exact, _screen_exact),
+    "record_novel_signatures": (_record_signatures, _screen_signatures),
+}
+
+
+@pytest.mark.parametrize("record_path", sorted(RECORD_PATHS))
+def test_record_novel_recovers_interrupted_compaction_first(
+    spark, table_name, record_path
+):
+    """Round-10: a record call on the post-crash state (history under
+    __old only) used to CREATE a stub live table, making the next
+    recovery drop the real history. Both record paths must roll the
+    swap back first."""
+    record, screen = RECORD_PATHS[record_path]
+    seed = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "pack my box with five dozen liquor jugs today"),
+    ]
+    record(spark, seed, table_name, "b1")
+    n_seed = spark.table(table_name).count()
+    # crash between the two compaction renames
+    spark.sql(f"ALTER TABLE {table_name} RENAME TO {table_name}__old")
+    record(
+        spark, [(3, "sphinx of black quartz judge my solemn vow")],
+        table_name, "b2",
+    )
     assert not spark.catalog.tableExists(f"{table_name}__old")
-    # the full history survived: both old hashes and the new one
-    assert spark.table(table_name).count() == 3
+    # the full history survived: every batch-1 row and the new batch's
+    per_batch = {
+        r["ingest_batch"]: r["count"]
+        for r in spark.table(table_name).groupBy("ingest_batch").count().collect()
+    }
+    assert per_batch == {"b1": n_seed, "b2": n_seed // len(seed)}
     # and screening still sees batch-1 content as duplicates
-    assert _novel_ids(spark, [(9, "aa"), (8, "zz")], table_name, "b3") == [8]
+    assert screen(
+        spark,
+        [(9, seed[0][1]), (8, "waltz bad nymph for quick jigs vex")],
+        table_name,
+    ) == [8]
 
 
 def test_screen_accepts_case_variant_id_col(spark, table_name):

@@ -3,6 +3,9 @@ quarantine, strict failfast."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 
 from dask_felleskomponenter_spark.sources.files import CORRUPT_COL, read_csv, read_json
@@ -785,3 +788,61 @@ def test_recover_interrupted_swap_reaps_leftover_old(tmp_path):
     os.rename(str(live), str(old))
     recover_interrupted_swap(str(live))
     assert live.exists() and not old.exists()
+
+
+def _swap_leftovers(tmp_path):
+    return sorted(
+        p.name for p in tmp_path.iterdir()
+        if p.name.endswith(".old") or ".staging-" in p.name
+    )
+
+
+def test_swap_publish_commits_body_output(tmp_path):
+    """The body writes the yielded staging dir; on return it is the
+    live dir and neither ``.old`` nor a staging dir is left."""
+    from dask_felleskomponenter_spark.ioutil import swap_publish
+
+    live = tmp_path / "data"
+    live.mkdir(); (live / "part-0").write_text("old")
+    with swap_publish(str(live)) as staging:
+        assert staging.startswith(f"{live}.staging-")
+        # the live dir still serves the old content inside the block
+        assert (live / "part-0").read_text() == "old"
+        os.makedirs(staging)
+        with open(os.path.join(staging, "part-0"), "w") as fh:
+            fh.write("new")
+    assert (live / "part-0").read_text() == "new"
+    assert _swap_leftovers(tmp_path) == []
+
+
+def test_swap_publish_keeps_old_content_when_body_raises(tmp_path):
+    from dask_felleskomponenter_spark.ioutil import swap_publish
+
+    live = tmp_path / "data"
+    live.mkdir(); (live / "part-0").write_text("old")
+    with pytest.raises(RuntimeError, match="write failed"):
+        with swap_publish(str(live)) as staging:
+            os.makedirs(staging)
+            with open(os.path.join(staging, "part-0"), "w") as fh:
+                fh.write("partial")
+            raise RuntimeError("write failed")
+    assert (live / "part-0").read_text() == "old"
+    assert _swap_leftovers(tmp_path) == []
+
+
+def test_swap_publish_restores_lone_old_on_entry(tmp_path):
+    """A crash between the two renames leaves only ``.old``: entry
+    restores it before the body runs, so the body reads the history."""
+    from dask_felleskomponenter_spark.ioutil import swap_publish
+
+    live = tmp_path / "data"
+    old = tmp_path / "data.old"
+    old.mkdir(); (old / "part-0").write_text("history")
+    with swap_publish(str(live)) as staging:
+        assert (live / "part-0").read_text() == "history"
+        assert not old.exists()
+        shutil.copytree(live, staging)
+        with open(os.path.join(staging, "part-1"), "w") as fh:
+            fh.write("batch")
+    assert sorted(p.name for p in live.iterdir()) == ["part-0", "part-1"]
+    assert _swap_leftovers(tmp_path) == []

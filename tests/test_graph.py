@@ -78,6 +78,45 @@ def test_long_chain_converges_logarithmically(spark, monkeypatch):
     assert len(got) == 65
 
 
+
+def test_star_loop_jobs_per_round_under_aqe(spark, monkeypatch):
+    """Pins the Spark jobs the star loop runs on a 64-node chain: 4 to
+    persist and count the edge list, then 19 in round 1 and 13 in each
+    of the 5 later rounds. Under AQE every shuffle stage runs as a job
+    of its own, and ``localCheckpoint(eager=False)`` runs the shuffle
+    stages of the subtree it truncates. A change to the loop's plan
+    shape moves these counts."""
+    _force_star_loop(monkeypatch)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    group = f"cc-jobs-{id(monkeypatch)}"
+
+    def jobs_so_far():
+        bus.waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    marks = []
+    small_star = graph._small_star
+
+    def marking_small_star(*args, **kwargs):
+        # called once per round, after the previous round's probe
+        marks.append(jobs_so_far())
+        return small_star(*args, **kwargs)
+
+    monkeypatch.setattr(graph, "_small_star", marking_small_star)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 64)], "id_a bigint, id_b bigint"
+    )
+    sc.setJobGroup(group, "connected_components star loop")
+    try:
+        cc = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    marks.append(jobs_so_far())
+    assert marks[0] == 4
+    assert [b - a for a, b in zip(marks, marks[1:])] == [19] + [13] * 5
+    assert {r["component"] for r in cc.collect()} == {1}
+
 def test_random_graph_matches_union_find(spark):
     rng = random.Random(42)
     nodes = list(range(200))

@@ -54,16 +54,24 @@ def _normalize(rows: list[dict], cols: list[str]) -> list[tuple]:
     return [tuple(norm_val(r[c]) for c in ordered_cols) for r in rows]
 
 
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 def _run_uncached(spark, sf_dir, name):
     """Build and collect one query from an empty cache; it must leave
     no CacheManager entry behind (a cached subtree left registered is
-    substituted into later plans of the same session)."""
+    substituted into later plans of the same session), and no temp view
+    (a fixed view name clobbers the caller's view of that name)."""
     spark.catalog.clearCache()
+    views = _temp_views(spark)
     sdf = QUERIES[name](spark, sf_dir)
     rows = sdf.collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         f"{name} left a cached plan registered in the session"
     )
+    added = _temp_views(spark) - views
+    assert not added, f"{name} left temp views {sorted(added)} in the session"
     if not QUERIES[name].order:
         assert len(rows) <= 1, f"{name} declares no order but emits {len(rows)} rows"
     return sdf, rows

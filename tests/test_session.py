@@ -88,22 +88,40 @@ class _RecordingBuilder:
         return self.conf
 
 
+def _built_conf(monkeypatch, **kwargs):
+    """The conf ``get_spark(**kwargs)`` would build a session with."""
+    monkeypatch.setattr(
+        session_mod,
+        "SparkSession",
+        SimpleNamespace(builder=_RecordingBuilder()),
+    )
+    return session_mod.get_spark(**kwargs)
+
+
 def test_get_spark_sizes_codegen_cache_and_extra_conf_overrides(
     spark, monkeypatch
 ):
     # the fixture session is built by get_spark
     assert spark.conf.get(CACHE_KEY) == str(CODEGEN_CACHE_ENTRIES)
 
-    def built_conf(**kwargs):
-        monkeypatch.setattr(
-            session_mod,
-            "SparkSession",
-            SimpleNamespace(builder=_RecordingBuilder()),
-        )
-        return session_mod.get_spark(**kwargs)
+    assert _built_conf(monkeypatch)[CACHE_KEY] == str(CODEGEN_CACHE_ENTRIES)
+    conf = _built_conf(monkeypatch, extra_conf={CACHE_KEY: "64"})
+    assert conf[CACHE_KEY] == "64"
 
-    assert built_conf()[CACHE_KEY] == str(CODEGEN_CACHE_ENTRIES)
-    assert built_conf(extra_conf={CACHE_KEY: "64"})[CACHE_KEY] == "64"
+
+def test_get_spark_ignores_retired_env_knobs(monkeypatch):
+    """Python worker reuse stays off and the shuffle width follows the
+    core count whatever the environment says; ``shuffle_partitions``
+    and ``extra_conf`` are the ways to set the width."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    monkeypatch.setenv("SPARK_GRAFT_PY_WORKER_REUSE", "true")
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "3")
+
+    conf = _built_conf(monkeypatch)
+    assert conf["spark.python.worker.reuse"] == "false"
+    assert conf["spark.sql.shuffle.partitions"] == "8"  # max(cores, 8)
+    conf = _built_conf(monkeypatch, shuffle_partitions=3)
+    assert conf["spark.sql.shuffle.partitions"] == "3"
 
 
 def test_repeat_pass_compiles_no_generated_class(spark):
